@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** The one session configuration both measurement mains share — BenchProbe
     * numbers are only comparable to Bench's if every conf matches. */
@@ -36,6 +38,33 @@ object Bench {
     spark
   }
 
+  /** Runs every query `reps` times at `dir` and returns the per-query MIN
+    * seconds of the queries that never threw, plus the names of those that
+    * did: a failed query gets no timing at all. */
+  private[graft] def timeQueries(spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame], dir: String,
+      reps: Int): (Map[String, Double], Seq[String]) = {
+    val best = mutable.HashMap.empty[String, Double]
+    val failed = mutable.LinkedHashSet.empty[String]
+    for (_ <- 1 to reps; (name, fn) <- queries if !failed(name)) {
+      val t0 = System.nanoTime()
+      try {
+        // toRdd.count() materializes every output row in full — a plain
+        // df.count() lets Catalyst prune the projection, hiding the cost of
+        // queries whose work IS the projected expressions
+        fn(spark, dir).queryExecution.toRdd.count()
+        val sec = (System.nanoTime() - t0) / 1e9
+        best(name) = best.get(name).fold(sec)(math.min(_, sec))
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          best -= name
+      }
+    }
+    (best.toMap, failed.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = buildSession()
@@ -57,10 +86,7 @@ object Bench {
         .find(d => d.isDirectory && d.getPath != new java.io.File(sfDir).getPath)
         .map(_.getPath).getOrElse(sfDir)
     }
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try { fn(spark, warmDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => () }
-    }
+    val (_, warmFailed) = timeQueries(spark, SparkEntry.queries, warmDir, 1)
     // Per-query MIN over full suite passes: the recording VM shows roving
     // multi-second slowdown bands (hypervisor noise NOT visible as steal —
     // r4's artifact recorded 2-10x inflation on whichever queries a band
@@ -69,19 +95,11 @@ object Bench {
     // steady-state cost — the same warm-engine regime the DuckDB baseline
     // numbers were recorded in.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val passes = (1 to reps).map { _ =>
-      SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // toRdd.count() materializes every output row in full — a plain
-        // df.count() lets Catalyst prune the projection, hiding the cost of
-        // queries whose work IS the projected expressions
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val results = passes.reduce((a, b) =>
-      a.map { case (k, v) => k -> math.min(v, b(k)) })
+    val (timed, passFailed) = timeQueries(spark, SparkEntry.queries, sfDir, reps)
+    // a query that failed in any pass, warm-up included, is reported under
+    // "failed" and left out of the timings and the total
+    val failed = (warmFailed ++ passFailed).distinct.sorted
+    val results = timed -- failed
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     // The driver captures only the LAST 2000 characters of stdout and parses
     // the metric line out of that window. Rounds 1-6 all recorded
@@ -110,19 +128,22 @@ object Bench {
     // construction; full names on collision) at 2 dp, growing the list only
     // while the line stays under 1500 chars. n_queries/queries_shown make
     // the truncation explicit; BENCH_DETAIL.json holds the full split.
+    // Failed queries are listed by full name.
     def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     val short = results.toSeq.map { case (k, v) => k.takeWhile(_ != '_') -> v }
     val keyed =
       if (short.map(_._1).toSet.size == results.size) short else results.toSeq
     val slowest = keyed.sortBy(-_._2)
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def mkLine(k: Int): String = {
       val qs = slowest.take(k).map { case (n, v) => "\"" + n + "\":" + f2(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","agg":"min-of-$reps-passes","n_queries":${results.size},"queries_shown":$k,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","agg":"min-of-$reps-passes","n_queries":${results.size},"failed":$failedJson,"queries_shown":$k,"queries":$qs,"sf":"$sfDir"}"""
     }
     var k = math.min(40, slowest.size)
     while (k > 0 && mkLine(k).length > 1500) k -= 1
     println(mkLine(k))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -4,6 +4,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.intervals.BoundedIntervals
 import graft.intervals.IntervalCols._
 
 /** Interval overlap join (reference I1–I3, `src/DataFrameIntervals.jl:97-180`):
@@ -25,14 +27,28 @@ import graft.intervals.IntervalCols._
   *    `greatest(l.start, r.start)` — no distinct needed). This is the classic
   *    interval-binning MapReduce pattern; it turns an O(n·m) nested loop into
   *    a sort-merge join that partitions across a cluster.
-  *  - [[Strategy.Auto]] — Range when either side's Catalyst size estimate is
-  *    within the broadcast threshold, else Binned (inner joins).
+  *  - [[Strategy.Sweep]] — range-partitioned plane sweep ([[SweepJoin]]);
+  *    half-open inner joins only.
+  *  - [[Strategy.Auto]] — Range when the smaller side is small in both bytes
+  *    and estimated rows (`maxRangeRows`), else Sweep for half-open inner
+  *    joins and Binned otherwise; always Range without an integral tick
+  *    space (floating or non-integral bounded endpoints).
   *
   * Bin width is chosen from one cheap stats pass over both `on` columns
   * (column-pruned scan): wide enough that no interval explodes to more than
-  * `maxBinsPerRow` bins and the total bin count stays near `targetBins`.
+  * 1024 bins and the total bin count stays near 2^20 (fixed constants).
   * Pass `binWidth` explicitly to skip the stats pass (recommended in
   * production pipelines where the time scale is known).
+  *
+  * ## One pipeline for every interval form
+  *
+  * Half-open intervals (integral, floating or timestamp endpoints) and
+  * bounded `struct<start,stop,lclosed,rclosed>` intervals run through the
+  * same steps: validate, project to positional temp columns, pick a
+  * strategy, join, select the output; they share one binned plan. The form
+  * (`Form`) decides only the `on` projection and NULL guard, the overlap
+  * predicate, each side's bin array, the intersection and `backto`
+  * expressions, and which strategies it rejects.
   *
   * ## Semantics carried over from the reference (SURVEY §2.1)
   *
@@ -75,8 +91,6 @@ object IntervalJoin {
       keepright: Boolean = false,
       strategy: Strategy = Strategy.Auto,
       binWidth: Option[Long] = None,
-      targetBins: Long = 1L << 20,
-      maxBinsPerRow: Long = 1024L,
       checkMissing: Boolean = true,
       /** Auto picks the broadcast range join only when the smaller side's
         * estimated ROW count stays under this. Broadcast-small-in-bytes is
@@ -91,12 +105,11 @@ object IntervalJoin {
       /** Sweep fat-tail guard: intervals LONGER than this route to
         * broadcast side-joins instead of replicating across every range
         * partition they span (SweepJoin's long/short split). None = auto:
-        * long means "would replicate > sweepMaxReplication range
-        * partitions" (length > that many typical range widths); when no
+        * long means "would replicate to more than 16 range partitions"
+        * (length > that many typical range widths); when no
         * sampled row exceeds the bound — every short-span fixture — the
         * split never engages and the plan is the pure sweep, unchanged. */
       sweepLongThreshold: Option[Long] = None,
-      sweepMaxReplication: Int = 16,
       /** If the long mass exceeds this row count, broadcasting it would be
         * worse than replicating it — fall back to the unsplit sweep. The
         * long-mass branches are broadcast nested-loop joins with a pure
@@ -131,7 +144,6 @@ object IntervalJoin {
     * every other value, so they are rejected — quantize first. */
   def stabJoin(points: DataFrame, intervals: DataFrame, on: (String, String),
       opts: Options = Options()): DataFrame = {
-    import org.apache.spark.sql.types._
     val (ptName, ivName) = on
     require(points.columns.contains(ptName), s"points frame has no column `$ptName`")
     val tmp = "__stab_span"
@@ -177,59 +189,9 @@ object IntervalJoin {
     require(right.columns.contains(rOnName), s"right frame has no column `$rOnName`")
     checkOnColumn(left, lOnName, "left")
     checkOnColumn(right, rOnName, "right")
-
-    // Bounded intervals (struct<start,stop,lclosed,rclosed> — the
-    // reference's generic `Interval{T,L,R}`, src/DataFrameIntervals.jl:31-35,
-    // closed-closed example README.md:29) join on the bound-sensitive
-    // predicates: range/theta with a broadcast-small side, or a binned
-    // equi-join (inclusive-stop bins, bound-sensitive residual) for big-big
-    // inner joins with integral endpoints. A plain half-open side joining a
-    // bounded side is lifted to Closed-Open.
-    if (isBounded(left, lOnName) || isBounded(right, rOnName))
-      return boundedJoin(left, right, on, opts)
-
-    // Timestamp-struct intervals are supported natively: converted to exact
-    // long-µs ticks for the join, converted back on output (the reference's
-    // `backto` contract — results keep the input representation). Mixed
-    // long/timestamp sides are ambiguous (whose unit is the long?) → error.
-    val lTsType = timestampEndpointType(left, lOnName)
-    val rTsType = timestampEndpointType(right, rOnName)
-    if (lTsType != rTsType)
-      throw new IllegalArgumentException(
-        "interval_join requires both `on` columns in the same representation: " +
-          s"left `$lOnName` is ${lTsType.map(_.simpleString).getOrElse("long")}-based but right " +
-          s"`$rOnName` is ${rTsType.map(_.simpleString).getOrElse("long")}-based; convert one side " +
-          "(IntervalCols.microsFromTimestampStruct / timestampStructFromMicros).")
-    val lTs = lTsType.isDefined
-    val ntz = lTsType.contains(org.apache.spark.sql.types.TimestampNTZType)
-    // non-timestamp endpoints: integral types widen to long ticks internally
-    // and are restored on output (`backto`); floating endpoints (reference
-    // generic ordered `T`, src/DataFrameIntervals.jl:31) widen to double and
-    // are range-join-only — floats have no exact tick space for the
-    // binned/sweep integer math
-    val (lIntType, rIntType) =
-      if (lTs) (None, None)
-      else (Some(endpointType(left, lOnName, "left")),
-        Some(endpointType(right, rOnName, "right")))
-    val isFloat = lIntType.exists(isFloating) || rIntType.exists(isFloating)
-    if (isFloat && !lIntType.forall(isFloating))
-      throw new IllegalArgumentException(
-        "interval_join cannot mix floating and integral interval endpoints across sides " +
-          s"(left `$lOnName` is ${lIntType.get.simpleString}, right `$rOnName` is " +
-          s"${rIntType.get.simpleString}); cast one side explicitly.")
-    if (isFloat && !rIntType.forall(isFloating))
-      throw new IllegalArgumentException(
-        "interval_join cannot mix floating and integral interval endpoints across sides " +
-          s"(left `$lOnName` is ${lIntType.get.simpleString}, right `$rOnName` is " +
-          s"${rIntType.get.simpleString}); cast one side explicitly.")
-    if (isFloat && (opts.strategy == Strategy.Binned || opts.strategy == Strategy.Sweep))
-      throw new IllegalArgumentException(
-        s"the ${opts.strategy} strategy requires integral or timestamp interval endpoints " +
-          "(exact tick space); floating endpoints run on Strategy.Range — quantize the " +
-          "endpoints to integer ticks to use the binned/sweep scale paths.")
-
-    // Output intersection column keeps the LEFT frame's `on` name (ref :76).
-    val joinedOn = lOnName
+    val form =
+      if (isBounded(left, lOnName) || isBounded(right, rOnName)) boundedForm(left, right, on, opts)
+      else halfOpenForm(left, right, on, opts)
     val finalNames = finalNamesFor(left, right, on, opts)
 
     // Rename ALL columns to positional temp names before the join — kills
@@ -239,24 +201,12 @@ object IntervalJoin {
     val rTmp = right.columns.indices.map(i => s"__r$i")
     val lOnT = s"__l${left.columns.indexOf(lOnName)}"
     val rOnT = s"__r${right.columns.indexOf(rOnName)}"
-    def project(df: DataFrame, tmp: Seq[String], onName: String, onT: String,
-        side: String, intType: Option[org.apache.spark.sql.types.DataType]) =
+    def project(df: DataFrame, tmp: Seq[String], onT: String, isLeft: Boolean) =
       df.select(df.columns.zip(tmp).map { case (c, t) =>
-        if (t == onT) {
-          val norm = if (opts.checkMissing) rejectNull(col(c), side) else normalize(col(c))
-          val internal = internalTypeOf(intType)
-          val ticks =
-            if (lTs) microsFromTimestampStruct(norm, ntz)
-            else if (internal.isDefined)
-              when(norm.isNull, lit(null)).otherwise(
-                interval(norm.getField("start").cast(internal.get),
-                  norm.getField("stop").cast(internal.get)))
-            else norm
-          ticks.as(t)
-        } else col(c).as(t)
+        (if (t == onT) form.project(col(c), isLeft) else col(c)).as(t)
       }: _*)
-    val l2 = project(left, lTmp, lOnName, lOnT, "left", lIntType)
-    val r2 = project(right, rTmp, rOnName, rOnT, "right", rIntType)
+    val l2 = project(left, lTmp, lOnT, isLeft = true)
+    val r2 = project(right, rTmp, rOnT, isLeft = false)
 
     val joinType = (opts.keepleft, opts.keepright) match {
       case (false, false) => "inner"
@@ -266,50 +216,225 @@ object IntervalJoin {
     }
 
     val strategy = opts.strategy match {
-      case Strategy.Auto if isFloat => Strategy.Range // no tick space to bin
-      case Strategy.Auto =>
-        if (rangeJoinViable(l2, r2, opts)) Strategy.Range
-        // big-big: the per-partition sweep beats the binned equi-join on
-        // inner joins (measured 1.4x at 29 M pairs, 2.8x at 500 M — and the
-        // gap WIDENS with scale); outer variants run on the binned path
-        else if (joinType == "inner") Strategy.Sweep
-        else Strategy.Binned
+      case Strategy.Auto if !form.binnable || rangeJoinViable(l2, r2, opts) => Strategy.Range
+      // big-big: the per-partition sweep beats the binned equi-join on
+      // inner joins (measured 1.4x at 29 M pairs, 2.8x at 500 M — and the
+      // gap WIDENS with scale); outer variants run on the binned path
+      case Strategy.Auto if joinType == "inner" && form.sweepable => Strategy.Sweep
+      case Strategy.Auto => Strategy.Binned
       case s => s
     }
 
     val joined = strategy match {
-      case Strategy.Binned if joinType == "inner" =>
-        binnedInner(l2, r2, lOnT, rOnT, opts)
       case Strategy.Sweep if joinType == "inner" =>
         SweepJoin.sweepInner(l2, r2, lOnT, rOnT, opts)
+      case Strategy.Binned if joinType == "inner" =>
+        binnedInner(l2, r2, lOnT, rOnT, form, opts)
       case Strategy.Binned | Strategy.Sweep =>
-        binnedOuter(l2, r2, lOnT, rOnT, opts)
+        binnedOuter(l2, r2, lOnT, rOnT, form, joinType, opts)
       case _ =>
         // Theta join; Catalyst broadcasts the small side (BNLJ) — right for
         // the reference's canonical small-window workloads.
-        l2.join(r2, overlaps(col(lOnT), col(rOnT)), joinType)
+        l2.join(r2, form.overlap(col(lOnT), col(rOnT)), joinType)
     }
 
-    def backto(c: Column, intType: Option[org.apache.spark.sql.types.DataType]): Column =
-      if (lTs) timestampStructFromMicros(c, ntz)
+    // Output intersection column keeps the LEFT frame's `on` name (ref :76).
+    val outCols = (lTmp ++ rTmp).zip(finalNames).map { case (t, f) =>
+      (if (t == lOnT) form.backto(col(t), isLeft = true)
+       else if (t == rOnT) form.backto(col(t), isLeft = false)
+       else col(t)).as(f)
+    } :+ form.intersect(col(lOnT), col(rOnT)).as(lOnName)
+    joined.select(outCols: _*)
+  }
+
+  /** What the interval form decides in the one join pipeline; validation of
+    * the form's own inputs happens when it is built. Columns passed in are
+    * the projected temp `on` columns, except for `project`'s input. */
+  private trait Form {
+    /** The form has an exact integral tick space, which the binned path needs. */
+    def binnable: Boolean
+    def sweepable: Boolean
+    /** Input `on` column → its internal join representation, NULL-guarded. */
+    def project(c: Column, isLeft: Boolean): Column
+    /** The Range join condition. */
+    def overlap(l: Column, r: Column): Column
+    /** The binned join's residual: only non-empty intervals receive bins. */
+    def binnedOverlap(l: Column, r: Column): Column = overlap(l, r)
+    /** The side's bins run to an INCLUSIVE stop (a closed stop can still
+      * touch-match inside its own bin), and a closed-closed point gets its
+      * one bin; otherwise the stop bin is exclusive. */
+    def closedBins(isLeft: Boolean): Boolean
+    /** Output form of a side's `on` column (the reference's `backto`). */
+    def backto(c: Column, isLeft: Boolean): Column
+    /** The appended intersection column, NULL for null-extended rows. */
+    def intersect(l: Column, r: Column): Column
+  }
+
+  /** Half-open intervals. Timestamp-struct intervals are supported
+    * natively: converted to exact long-µs ticks for the join, converted back
+    * on output (the reference's `backto` contract — results keep the input
+    * representation). Mixed long/timestamp sides are ambiguous (whose unit
+    * is the long?) → error. */
+  private def halfOpenForm(left: DataFrame, right: DataFrame, on: (String, String),
+      opts: Options): Form = {
+    val (lOnName, rOnName) = on
+    val lTsType = timestampEndpointType(left, lOnName)
+    val rTsType = timestampEndpointType(right, rOnName)
+    if (lTsType != rTsType)
+      throw new IllegalArgumentException(
+        "interval_join requires both `on` columns in the same representation: " +
+          s"left `$lOnName` is ${lTsType.map(_.simpleString).getOrElse("long")}-based but right " +
+          s"`$rOnName` is ${rTsType.map(_.simpleString).getOrElse("long")}-based; convert one side " +
+          "(IntervalCols.microsFromTimestampStruct / timestampStructFromMicros).")
+    val ts = lTsType.isDefined
+    val ntz = lTsType.contains(TimestampNTZType)
+    // non-timestamp endpoints: integral types widen to long ticks internally
+    // and are restored on output (`backto`); floating endpoints (reference
+    // generic ordered `T`, src/DataFrameIntervals.jl:31) widen to double and
+    // are range-join-only — floats have no exact tick space for the
+    // binned/sweep integer math
+    val (lIntType, rIntType) =
+      if (ts) (None, None)
+      else (Some(endpointType(left, lOnName, "left")),
+        Some(endpointType(right, rOnName, "right")))
+    val isFloat = lIntType.exists(isFloating) || rIntType.exists(isFloating)
+    if (isFloat && !(lIntType ++ rIntType).forall(isFloating))
+      throw new IllegalArgumentException(
+        "interval_join cannot mix floating and integral interval endpoints across sides " +
+          s"(left `$lOnName` is ${lIntType.get.simpleString}, right `$rOnName` is " +
+          s"${rIntType.get.simpleString}); cast one side explicitly.")
+    if (isFloat && (opts.strategy == Strategy.Binned || opts.strategy == Strategy.Sweep))
+      throw new IllegalArgumentException(
+        s"the ${opts.strategy} strategy requires integral or timestamp interval endpoints " +
+          "(exact tick space); floating endpoints run on Strategy.Range — quantize the " +
+          "endpoints to integer ticks to use the binned/sweep scale paths.")
+    // the intersection mixes both sides' values -> the wider integral type
+    val isectType = for (a <- lIntType; b <- rIntType)
+      yield if (a.defaultSize >= b.defaultSize) a else b
+    def back(c: Column, intType: Option[DataType]): Column =
+      if (ts) timestampStructFromMicros(c, ntz)
       else intType match {
-        case Some(dt) if dt != org.apache.spark.sql.types.LongType =>
+        case Some(dt) if dt != LongType =>
           when(c.isNull, lit(null)).otherwise(
             struct(c.getField("start").cast(dt).as("start"),
               c.getField("stop").cast(dt).as("stop")))
         case _ => c
       }
-    // the intersection mixes both sides' values -> the wider integral type
-    def width(dt: org.apache.spark.sql.types.DataType): Int = dt.defaultSize
-    val isectType = for (a <- lIntType; b <- rIntType)
-      yield if (width(a) >= width(b)) a else b
-    val outCols = (lTmp ++ rTmp).zip(finalNames).map { case (t, f) =>
-      if (t == lOnT) backto(col(t), lIntType).as(f)
-      else if (t == rOnT) backto(col(t), rIntType).as(f)
-      else col(t).as(f)
-    } :+ backto(intersection(col(lOnT), col(rOnT)), isectType).as(joinedOn)
-    joined.select(outCols: _*)
+    new Form {
+      val binnable = !isFloat
+      val sweepable = true
+      def project(c: Column, isLeft: Boolean) = {
+        val norm =
+          if (opts.checkMissing) rejectNull(c, if (isLeft) "left" else "right")
+          else normalize(c)
+        val internal = internalTypeOf(if (isLeft) lIntType else rIntType)
+        if (ts) microsFromTimestampStruct(norm, ntz)
+        else if (internal.isDefined)
+          when(norm.isNull, lit(null)).otherwise(
+            interval(norm.getField("start").cast(internal.get),
+              norm.getField("stop").cast(internal.get)))
+        else norm
+      }
+      def overlap(l: Column, r: Column) = overlaps(l, r)
+      // Raw overlap predicate (no degenerate-interval conjuncts): only rows
+      // with start < stop receive bins at all, so the extra checks that
+      // `overlaps` needs on the Range path are already guaranteed here —
+      // two fewer comparisons per candidate pair in the hot loop.
+      override def binnedOverlap(l: Column, r: Column) =
+        start(l) < stop(r) && start(r) < stop(l)
+      def closedBins(isLeft: Boolean) = false
+      def backto(c: Column, isLeft: Boolean) = back(c, if (isLeft) lIntType else rIntType)
+      def intersect(l: Column, r: Column) = back(intersection(l, r), isectType)
+    }
   }
+
+  /** Bounded intervals (struct<start,stop,lclosed,rclosed> — the
+    * reference's generic `Interval{T,L,R}`, src/DataFrameIntervals.jl:31-35,
+    * closed-closed example README.md:29) on at least one side; a plain
+    * half-open side is lifted to Closed-Open. No tick conversion — the
+    * predicates are pure comparisons, so any atomic orderable endpoint type
+    * works on the Range path (ints, floats, timestamps, dates...), it only
+    * has to agree across all four endpoints; the binned path needs integral
+    * endpoints. The joined output column follows the reference's
+    * `backto`-to-left contract: bounded (with merged flags) when the LEFT
+    * side is bounded, plain start/stop when the left side is a half-open
+    * struct joined against a bounded right. */
+  private def boundedForm(left: DataFrame, right: DataFrame, on: (String, String),
+      opts: Options): Form = {
+    val (lOnName, rOnName) = on
+    val lB = isBounded(left, lOnName)
+    val rB = isBounded(right, rOnName)
+    def epTypes(df: DataFrame, name: String) = {
+      val s = df.schema(name).dataType.asInstanceOf[StructType]
+      (s("start").dataType, s("stop").dataType)
+    }
+    val (ls, le) = epTypes(left, lOnName)
+    val (rs, re) = epTypes(right, rOnName)
+    if (!(ls == le && rs == re && ls == rs))
+      throw new IllegalArgumentException(
+        "bounded interval join requires ONE endpoint type across all four endpoints; got " +
+          s"left struct<start:${ls.simpleString}, stop:${le.simpleString}>, " +
+          s"right struct<start:${rs.simpleString}, stop:${re.simpleString}>")
+    for ((df, name, bounded) <- Seq((left, lOnName, lB), (right, rOnName, rB)) if bounded) {
+      val s = df.schema(name).dataType.asInstanceOf[StructType]
+      val bad = Seq("lclosed", "rclosed").filter(f => s(f).dataType != BooleanType)
+      if (bad.nonEmpty)
+        throw new IllegalArgumentException(
+          s"bounded interval column `$name`: ${bad.mkString(", ")} must be boolean")
+    }
+    val integral = Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(ls)
+    def rejectStrategy(reason: String): Nothing = throw new IllegalArgumentException(
+      s"the ${opts.strategy} strategy cannot run this bounded interval join ($reason); " +
+        "bounded joins run on Strategy.Range, or Strategy.Binned with integral endpoints.")
+    opts.strategy match {
+      case Strategy.Sweep => rejectStrategy("the sweep assumes half-open tick intervals")
+      case Strategy.Binned if !integral => rejectStrategy("no integral tick space to bin")
+      case _ =>
+    }
+    def reorder(c: Column, bounded: Boolean): Column =
+      if (bounded)
+        BoundedIntervals.bounded(c.getField("start"), c.getField("stop"),
+          c.getField("lclosed"), c.getField("rclosed"))
+      else normalize(c)
+    // NULL-preserving lift: a bare fromHalfOpen would wrap an outer join's
+    // unmatched-side NULL as struct(NULL,NULL,true,false) — non-NULL, so it
+    // would slip past intersectBounded's NULL guard and greatest/least would
+    // SKIP the null endpoints, fabricating an intersection equal to the
+    // matched side's own interval instead of NULL
+    def lifted(c: Column, bounded: Boolean): Column =
+      if (bounded) c
+      else when(c.isNull, lit(null)).otherwise(BoundedIntervals.fromHalfOpen(c))
+    new Form {
+      val binnable = integral
+      val sweepable = false
+      def project(c: Column, isLeft: Boolean) = {
+        val bounded = if (isLeft) lB else rB
+        if (!opts.checkMissing) reorder(c, bounded)
+        else when(c.isNull || c.getField("start").isNull || c.getField("stop").isNull ||
+            (if (bounded) c.getField("lclosed").isNull || c.getField("rclosed").isNull
+             else lit(false)),
+          raise_error(lit(s"There are missing values in the ${if (isLeft) "left" else "right"} " +
+            "table of `interval_join`.")))
+          .otherwise(reorder(c, bounded))
+      }
+      def overlap(l: Column, r: Column) =
+        BoundedIntervals.overlapsBounded(lifted(l, lB), lifted(r, rB))
+      def closedBins(isLeft: Boolean) = if (isLeft) lB else rB
+      def backto(c: Column, isLeft: Boolean) = c
+      def intersect(l: Column, r: Column) = {
+        val isect = BoundedIntervals.intersectBounded(lifted(l, lB), lifted(r, rB))
+        if (lB) isect
+        else when(isect.isNull, lit(null)).otherwise(
+          interval(isect.getField("start"), isect.getField("stop")))
+      }
+    }
+  }
+
+  /** Bin-width floors of the binned plan: no interval explodes to more than
+    * `MaxBinsPerRow` bins, and the total bin count stays within `TargetBins`
+    * so per-bin membership is never too fine-grained. */
+  private val TargetBins = 1L << 20
+  private val MaxBinsPerRow = 1024L
 
   /** Shared setup for the binned strategies: one cheap stats pass picks the
     * bin width, both sides explode to the bins they overlap, and the returned
@@ -321,11 +446,11 @@ object IntervalJoin {
     * with a NULL bin so outer variants can keep them) and stamps each side's
     * own first bin (`__lbin0`/`__rbin0`) for null-extension dedup. */
   private def binPlan(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      opts: Options, outer: Boolean): Option[(DataFrame, DataFrame, Column)] = {
-    val stats = l2.select(start(col(lOnT)).as("s"), stop(col(lOnT)).as("e"))
-      .unionAll(r2.select(start(col(rOnT)).as("s"), stop(col(rOnT)).as("e")))
-      .agg(min("s"), max("e"), max(col("e") - col("s")),
-        avg(col("e") - col("s"))).head()
+      form: Form, opts: Options, outer: Boolean): Option[(DataFrame, DataFrame, Column)] = {
+    def endpoints(df: DataFrame, onT: String) =
+      df.select(col(s"$onT.start").cast("long").as("s"), col(s"$onT.stop").cast("long").as("e"))
+    val stats = endpoints(l2, lOnT).unionAll(endpoints(r2, rOnT))
+      .agg(min("s"), max("e"), max(col("e") - col("s")), avg(col("e") - col("s"))).head()
     if (stats.isNullAt(0)) return None
     val lo = stats.getLong(0)
     val hi = stats.getLong(1)
@@ -335,47 +460,49 @@ object IntervalJoin {
     // Bin width ~ the average interval length: each interval then explodes
     // to ~2 bins, so candidate work per bin stays near-linear in the output
     // (w = maxLen/64 was measured 17x slower at sf0.1 — 33x row replication
-    // makes per-bin work quadratic). Floors: pathological long intervals may
-    // not explode past maxBinsPerRow copies, and the total bin count stays
-    // within targetBins so per-bin membership is never too fine-grained.
+    // makes per-bin work quadratic), within the MaxBinsPerRow/TargetBins floors.
     val w = opts.binWidth.getOrElse {
-      Seq(avgLen, ceilDiv(maxLen, opts.maxBinsPerRow), ceilDiv(span, opts.targetBins), 1L).max
+      Seq(avgLen, ceilDiv(maxLen, MaxBinsPerRow), ceilDiv(span, TargetBins), 1L).max
     }
     // bin(x) = (x - lo) div w ; offsets are non-negative so `div` == floor.
     // Exact 64-bit integer division (SQL `div`), never through Double —
-    // epoch-ns magnitudes (~1.7e18) exceed Double's 53-bit mantissa.
-    def binOf(xSql: String) = s"(($xSql) - ${lo}L) div ${w}L"
-    // Reversed/empty intervals (start >= stop) overlap nothing: give them an
-    // empty bin array instead of letting `sequence` count DOWN and explode
-    // one corrupt row into up to targetBins rows.
-    def binsOf(onT: String) = expr(
-      s"case when ($onT.start) < ($onT.stop) " +
-        s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop - 1")}) " +
-        "else cast(array() as array<bigint>) end")
-    def withBins(df: DataFrame, onT: String, binCol: String, bin0: String) = {
+    // epoch-ns magnitudes (~1.7e18) exceed Double's 53-bit mantissa. The
+    // cast widens narrower bounded endpoints; on long ticks the optimizer
+    // removes it.
+    def binOf(xSql: String) = s"((cast(($xSql) as bigint)) - ${lo}L) div ${w}L"
+    // Empty intervals overlap nothing: give them an empty bin array instead
+    // of letting `sequence` count DOWN and explode one corrupt row into up
+    // to TargetBins rows. Non-empty per BoundedIntervals.nonEmpty on a
+    // closed-bin side ([a,a] closed-closed is a point).
+    def binsOf(onT: String, closed: Boolean) = expr(
+      if (closed)
+        s"case when ($onT.start) < ($onT.stop) " +
+          s"or (($onT.start) = ($onT.stop) and ($onT.lclosed) and ($onT.rclosed)) " +
+          s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop")}) " +
+          "else cast(array() as array<bigint>) end"
+      else
+        s"case when ($onT.start) < ($onT.stop) " +
+          s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop - 1")}) " +
+          "else cast(array() as array<bigint>) end")
+    def withBins(df: DataFrame, onT: String, closed: Boolean, binCol: String, bin0: String) = {
       val exploded = df.withColumn(binCol,
-        if (outer) explode_outer(binsOf(onT)) else explode(binsOf(onT)))
+        if (outer) explode_outer(binsOf(onT, closed)) else explode(binsOf(onT, closed)))
       if (outer) exploded.withColumn(bin0, expr(binOf(s"$onT.start"))) else exploded
     }
-    val lB = withBins(l2, lOnT, "__lbin", "__lbin0")
-    val rB = withBins(r2, rOnT, "__rbin", "__rbin0")
+    val lB = withBins(l2, lOnT, form.closedBins(isLeft = true), "__lbin", "__lbin0")
+    val rB = withBins(r2, rOnT, form.closedBins(isLeft = false), "__rbin", "__rbin0")
     // Keep each matching pair only in the bin holding greatest(l.start,
     // r.start): dedup folded into the join residual, no `distinct` shuffle.
-    // Raw overlap predicate (no degenerate-interval conjuncts): only rows
-    // with start < stop receive bins at all, so the extra checks that
-    // `overlaps` needs on the Range path are already guaranteed here —
-    // two fewer comparisons per candidate pair in the hot loop.
-    val cond = col("__lbin") === col("__rbin") &&
-      start(col(lOnT)) < stop(col(rOnT)) && start(col(rOnT)) < stop(col(lOnT)) &&
+    val cond = col("__lbin") === col("__rbin") && form.binnedOverlap(col(lOnT), col(rOnT)) &&
       col("__lbin") === expr(binOf(s"greatest($lOnT.start, $rOnT.start)"))
     Some((lB, rB, cond))
   }
 
   /** Binned equi-join on overlapping fixed-width time buckets. See scaladoc. */
   private def binnedInner(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      opts: Options): DataFrame =
-    binPlan(l2, r2, lOnT, rOnT, opts, outer = false) match {
-      case None             => l2.join(r2, overlaps(col(lOnT), col(rOnT)), "inner")
+      form: Form, opts: Options): DataFrame =
+    binPlan(l2, r2, lOnT, rOnT, form, opts, outer = false) match {
+      case None             => l2.join(r2, form.overlap(col(lOnT), col(rOnT)), "inner")
       case Some((lB, rB, c)) => lB.join(rB, c, "inner").drop("__lbin", "__rbin")
     }
 
@@ -395,51 +522,36 @@ object IntervalJoin {
     * All shuffles are equi-partitioned (bins, then 8-byte ids) — no nested
     * loop anywhere. */
   private def binnedOuter(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      opts: Options): DataFrame = {
-    val joinType = (opts.keepleft, opts.keepright) match {
-      case (true, true)  => "full_outer"
-      case (true, false) => "left_outer"
-      case _             => "right_outer"
-    }
+      form: Form, joinType: String, opts: Options): DataFrame = {
     val lId = l2.withColumn("__lid", monotonically_increasing_id())
     val rId = r2.withColumn("__rid", monotonically_increasing_id())
-    binPlan(lId, rId, lOnT, rOnT, opts, outer = true) match {
+    binPlan(lId, rId, lOnT, rOnT, form, opts, outer = true) match {
       case None =>
-        l2.join(r2, overlaps(col(lOnT), col(rOnT)), joinType)
+        l2.join(r2, form.overlap(col(lOnT), col(rOnT)), joinType)
       case Some((lB, rB, cond)) =>
-        outerOverBins(lB, rB, cond, joinType, l2.columns ++ r2.columns, opts)
+        var flagged = lB.join(rB, cond, joinType)
+        if (opts.keepleft)
+          flagged = flagged.withColumn("__lmatch",
+            max(when(col("__rid").isNotNull, 1).otherwise(0)).over(
+              Window.partitionBy(coalesce(col("__lid"), lit(-1L) - col("__rid")))))
+        if (opts.keepright)
+          flagged = flagged.withColumn("__rmatch",
+            max(when(col("__lid").isNotNull, 1).otherwise(0)).over(
+              Window.partitionBy(coalesce(col("__rid"), lit(-1L) - col("__lid")))))
+        val matchedPair = col("__lid").isNotNull && col("__rid").isNotNull
+        val keepL =
+          if (opts.keepleft)
+            col("__rid").isNull && col("__lid").isNotNull && col("__lmatch") === 0 &&
+              (col("__lbin") === col("__lbin0") || col("__lbin").isNull)
+          else lit(false)
+        val keepR =
+          if (opts.keepright)
+            col("__lid").isNull && col("__rid").isNotNull && col("__rmatch") === 0 &&
+              (col("__rbin") === col("__rbin0") || col("__rbin").isNull)
+          else lit(false)
+        flagged.where(matchedPair || keepL || keepR)
+          .select((l2.columns ++ r2.columns).map(col): _*)
     }
-  }
-
-  /** The outer machinery shared by the tick and bounded binned paths: ONE
-    * binned outer join, window-computed matched flags, null-extension dedup
-    * by first bin (see [[binnedOuter]] scaladoc for the design notes).
-    * Expects `__lid`/`__rid` stamped before the bin explode and
-    * `__lbin`/`__lbin0` (resp. right) from the bin plan. */
-  private def outerOverBins(lB: DataFrame, rB: DataFrame, cond: Column,
-      joinType: String, outColumns: Seq[String], opts: Options): DataFrame = {
-    var flagged = lB.join(rB, cond, joinType)
-    if (opts.keepleft)
-      flagged = flagged.withColumn("__lmatch",
-        max(when(col("__rid").isNotNull, 1).otherwise(0)).over(
-          Window.partitionBy(coalesce(col("__lid"), lit(-1L) - col("__rid")))))
-    if (opts.keepright)
-      flagged = flagged.withColumn("__rmatch",
-        max(when(col("__lid").isNotNull, 1).otherwise(0)).over(
-          Window.partitionBy(coalesce(col("__rid"), lit(-1L) - col("__lid")))))
-    val matchedPair = col("__lid").isNotNull && col("__rid").isNotNull
-    val keepL =
-      if (opts.keepleft)
-        col("__rid").isNull && col("__lid").isNotNull && col("__lmatch") === 0 &&
-          (col("__lbin") === col("__lbin0") || col("__lbin").isNull)
-      else lit(false)
-    val keepR =
-      if (opts.keepright)
-        col("__lid").isNull && col("__rid").isNotNull && col("__rmatch") === 0 &&
-          (col("__rbin") === col("__rbin0") || col("__rbin").isNull)
-      else lit(false)
-    flagged.where(matchedPair || keepL || keepR)
-      .select(outColumns.map(col): _*)
   }
 
   private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
@@ -467,8 +579,7 @@ object IntervalJoin {
     smallStats.sizeInBytes <= thresh && smallRows <= opts.maxRangeRows
   }
 
-  /** The reference's output-naming contract, shared by the tick and bounded
-    * paths: left columns then right columns, `on` columns renamed by
+  /** The reference's output-naming contract: left columns then right columns, `on` columns renamed by
     * `renameon`, payload columns by `renamecols`, duplicates resolved by
     * `makeunique`, and nothing may clash with the joined output column
     * (named after the LEFT `on`, ref `src/DataFrameIntervals.jl:76,113-124`). */
@@ -502,211 +613,17 @@ object IntervalJoin {
     * lclosed/rclosed bound flags ([[graft.intervals.BoundedIntervals]]). */
   private def isBounded(df: DataFrame, name: String): Boolean =
     df.schema(name).dataType match {
-      case s: org.apache.spark.sql.types.StructType =>
+      case s: StructType =>
         Seq("start", "stop", "lclosed", "rclosed").forall(s.fieldNames.contains)
       case _ => false
     }
-
-  /** Range/theta join with per-row bound semantics. No tick conversion —
-    * the predicates are pure comparisons, so any atomic orderable endpoint
-    * type works (ints, floats, timestamps, dates...), it only has to agree
-    * across all four endpoints. The joined output column follows the
-    * reference's `backto`-to-left contract: bounded (with merged flags) when
-    * the LEFT side is bounded, plain start/stop when the left side is a
-    * half-open struct joined against a bounded right. */
-  private def boundedJoin(left: DataFrame, right: DataFrame,
-      on: (String, String), opts: Options): DataFrame = {
-    import graft.intervals.BoundedIntervals
-    val (lOnName, rOnName) = on
-    val lB = isBounded(left, lOnName)
-    val rB = isBounded(right, rOnName)
-    def epTypes(df: DataFrame, name: String) = {
-      val s = df.schema(name).dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      (s("start").dataType, s("stop").dataType)
-    }
-    val (ls, le) = epTypes(left, lOnName)
-    val (rs, re) = epTypes(right, rOnName)
-    if (!(ls == le && rs == re && ls == rs))
-      throw new IllegalArgumentException(
-        "bounded interval join requires ONE endpoint type across all four endpoints; got " +
-          s"left struct<start:${ls.simpleString}, stop:${le.simpleString}>, " +
-          s"right struct<start:${rs.simpleString}, stop:${re.simpleString}>")
-    for ((df, name, bounded) <- Seq((left, lOnName, lB), (right, rOnName, rB)) if bounded) {
-      val s = df.schema(name).dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      val bad = Seq("lclosed", "rclosed").filter(f =>
-        s(f).dataType != org.apache.spark.sql.types.BooleanType)
-      if (bad.nonEmpty)
-        throw new IllegalArgumentException(
-          s"bounded interval column `$name`: ${bad.mkString(", ")} must be boolean")
-    }
-
-    val joinedOn = lOnName
-    val finalNames = finalNamesFor(left, right, on, opts)
-
-    // positional temp names kill self-join ambiguity, as on the tick path
-    val lTmp = left.columns.indices.map(i => s"__l$i")
-    val rTmp = right.columns.indices.map(i => s"__r$i")
-    val lOnT = s"__l${left.columns.indexOf(lOnName)}"
-    val rOnT = s"__r${right.columns.indexOf(rOnName)}"
-    def reorder(c: Column, bounded: Boolean): Column =
-      if (bounded)
-        BoundedIntervals.bounded(c.getField("start"), c.getField("stop"),
-          c.getField("lclosed"), c.getField("rclosed"))
-      else normalize(c)
-    def guard(c: Column, side: String, bounded: Boolean): Column =
-      if (!opts.checkMissing) reorder(c, bounded)
-      else when(c.isNull || c.getField("start").isNull || c.getField("stop").isNull ||
-          (if (bounded) c.getField("lclosed").isNull || c.getField("rclosed").isNull
-           else lit(false)),
-        raise_error(lit(s"There are missing values in the $side table of `interval_join`.")))
-        .otherwise(reorder(c, bounded))
-    def project(df: DataFrame, tmp: Seq[String], onT: String, side: String, bounded: Boolean) =
-      df.select(df.columns.zip(tmp).map { case (c, t) =>
-        (if (t == onT) guard(col(c), side, bounded) else col(c)).as(t)
-      }: _*)
-    val l2 = project(left, lTmp, lOnT, "left", lB)
-    val r2 = project(right, rTmp, rOnT, "right", rB)
-
-    // NULL-preserving lift: a bare fromHalfOpen would wrap an outer join's
-    // unmatched-side NULL as struct(NULL,NULL,true,false) — non-NULL, so it
-    // would slip past intersectBounded's NULL guard and greatest/least would
-    // SKIP the null endpoints, fabricating an intersection equal to the
-    // matched side's own interval instead of NULL
-    def lifted(c: Column, bounded: Boolean): Column =
-      if (bounded) c
-      else when(c.isNull, lit(null)).otherwise(BoundedIntervals.fromHalfOpen(c))
-    val joinType = (opts.keepleft, opts.keepright) match {
-      case (false, false) => "inner"
-      case (true, false)  => "left_outer"
-      case (false, true)  => "right_outer"
-      case (true, true)   => "full_outer"
-    }
-    val overlapCond =
-      BoundedIntervals.overlapsBounded(lifted(col(lOnT), lB), lifted(col(rOnT), rB))
-    // Big-big bounded joins with integral endpoints get the same scale path
-    // as half-open intervals: a binned equi-join (inner AND outer — the
-    // outer variants reuse the tick path's window-flag machinery over the
-    // bounded bin plan). Binning differs in two bound-driven details — the
-    // stop bin is INCLUSIVE (a closed stop can still touch-match inside its
-    // own bin) and closed-closed points [a,a] are non-empty and get their
-    // one bin — and the bound-sensitive overlap runs as the residual
-    // predicate. Non-integral endpoints stay on the theta join (no exact
-    // tick space; Catalyst broadcasts the small side).
-    val integral = Seq[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType
-    ).contains(ls)
-    def rejectStrategy(reason: String): Nothing = throw new IllegalArgumentException(
-      s"the ${opts.strategy} strategy cannot run this bounded interval join ($reason); " +
-        "bounded joins run on Strategy.Range, or Strategy.Binned with integral endpoints.")
-    val useBinned = opts.strategy match {
-      case Strategy.Sweep => rejectStrategy("the sweep assumes half-open tick intervals")
-      case Strategy.Binned if !integral => rejectStrategy("no integral tick space to bin")
-      case Strategy.Binned => true
-      case Strategy.Auto if integral => !rangeJoinViable(l2, r2, opts)
-      case _ => false
-    }
-    val joined =
-      if (!useBinned) l2.join(r2, overlapCond, joinType)
-      else if (joinType == "inner")
-        boundedBinnedInner(l2, r2, lOnT, rOnT, lB, rB, opts, overlapCond)
-      else
-        boundedBinnedOuter(l2, r2, lOnT, rOnT, lB, rB, opts, overlapCond, joinType)
-
-    val isectBounded =
-      BoundedIntervals.intersectBounded(lifted(col(lOnT), lB), lifted(col(rOnT), rB))
-    val isect =
-      if (lB) isectBounded
-      else when(isectBounded.isNull, lit(null)).otherwise(
-        interval(isectBounded.getField("start"), isectBounded.getField("stop")))
-    val outCols = (lTmp ++ rTmp).zip(finalNames).map { case (t, f) => col(t).as(f) } :+
-      isect.as(joinedOn)
-    joined.select(outCols: _*)
-  }
-
-  /** The bounded twin of [[binPlan]] (see the call site for the
-    * bound-driven differences). `l2`/`r2` carry the projected temp columns;
-    * the `on` temp columns are bounded structs after `guard`/`lifted`
-    * normalization happens at the call site — here both are re-lifted
-    * identically so the residual `overlapCond` (built over the same temp
-    * names) applies unchanged. With `outer = true` rows with zero bins
-    * survive via `explode_outer` and each side stamps its first bin, feeding
-    * [[outerOverBins]] exactly like the tick path. */
-  private def boundedBinPlan(l2: DataFrame, r2: DataFrame, lOnT: String,
-      rOnT: String, lB: Boolean, rB: Boolean, opts: Options,
-      overlapCond: Column, outer: Boolean): Option[(DataFrame, DataFrame, Column)] = {
-    def sE(onT: String) = (col(s"$onT.start").cast("long"), col(s"$onT.stop").cast("long"))
-    val (ls0, le0) = sE(lOnT)
-    val (rs0, re0) = sE(rOnT)
-    val stats = l2.select(ls0.as("s"), le0.as("e"))
-      .unionAll(r2.select(rs0.as("s"), re0.as("e")))
-      .agg(min("s"), max("e"), max(col("e") - col("s")), avg(col("e") - col("s"))).head()
-    if (stats.isNullAt(0)) return None
-    val lo = stats.getLong(0)
-    val maxLen = math.max(stats.getLong(2), 1L)
-    val avgLen = math.max(math.ceil(stats.getDouble(3)).toLong, 1L)
-    val span = math.max(stats.getLong(1) - lo, 1L)
-    val w = opts.binWidth.getOrElse {
-      Seq(avgLen, ceilDiv(maxLen, opts.maxBinsPerRow), ceilDiv(span, opts.targetBins), 1L).max
-    }
-    def binOf(xSql: String) = s"((cast(($xSql) as bigint)) - ${lo}L) div ${w}L"
-    // bounded side: non-empty per BoundedIntervals.nonEmpty ([a,a] CC is a
-    // point), stop bin INCLUSIVE (a closed stop can touch-match in its own
-    // bin); plain half-open side: the tick path's exclusive-stop binning
-    def binsOf(onT: String, bounded: Boolean) = expr(
-      if (bounded)
-        s"case when ($onT.start) < ($onT.stop) " +
-          s"or (($onT.start) = ($onT.stop) and ($onT.lclosed) and ($onT.rclosed)) " +
-          s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop")}) " +
-          "else cast(array() as array<bigint>) end"
-      else
-        s"case when ($onT.start) < ($onT.stop) " +
-          s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop - 1")}) " +
-          "else cast(array() as array<bigint>) end")
-    def withBins(df: DataFrame, onT: String, bounded: Boolean,
-        binCol: String, bin0: String) = {
-      val exploded = df.withColumn(binCol,
-        if (outer) explode_outer(binsOf(onT, bounded)) else explode(binsOf(onT, bounded)))
-      if (outer) exploded.withColumn(bin0, expr(binOf(s"$onT.start"))) else exploded
-    }
-    val lBinned = withBins(l2, lOnT, lB, "__lbin", "__lbin0")
-    val rBinned = withBins(r2, rOnT, rB, "__rbin", "__rbin0")
-    val cond = col("__lbin") === col("__rbin") && overlapCond &&
-      col("__lbin") === expr(binOf(s"greatest($lOnT.start, $rOnT.start)"))
-    Some((lBinned, rBinned, cond))
-  }
-
-  /** Binned equi-join for bounded inner joins. */
-  private def boundedBinnedInner(l2: DataFrame, r2: DataFrame, lOnT: String,
-      rOnT: String, lB: Boolean, rB: Boolean, opts: Options,
-      overlapCond: Column): DataFrame =
-    boundedBinPlan(l2, r2, lOnT, rOnT, lB, rB, opts, overlapCond, outer = false) match {
-      case None => l2.join(r2, overlapCond, "inner")
-      case Some((lBinned, rBinned, cond)) =>
-        lBinned.join(rBinned, cond, "inner").drop("__lbin", "__rbin")
-    }
-
-  /** Binned outer variants for bounded joins: the bounded bin plan feeding
-    * the tick path's shared window-flag machinery — no BNLJ for big×big
-    * bounded outer asks. */
-  private def boundedBinnedOuter(l2: DataFrame, r2: DataFrame, lOnT: String,
-      rOnT: String, lB: Boolean, rB: Boolean, opts: Options,
-      overlapCond: Column, joinType: String): DataFrame = {
-    val lId = l2.withColumn("__lid", monotonically_increasing_id())
-    val rId = r2.withColumn("__rid", monotonically_increasing_id())
-    boundedBinPlan(lId, rId, lOnT, rOnT, lB, rB, opts, overlapCond, outer = true) match {
-      case None => l2.join(r2, overlapCond, joinType)
-      case Some((lBinned, rBinned, cond)) =>
-        outerOverBins(lBinned, rBinned, cond, joinType, l2.columns ++ r2.columns, opts)
-    }
-  }
 
   /** Plan-time schema validation, mirroring the reference's eager adapter
     * dispatch errors (SURVEY §1.3): the `on` column must be a struct
     * carrying `start` and `stop` fields (either order). */
   private def checkOnColumn(df: DataFrame, name: String, side: String): Unit =
     df.schema(name).dataType match {
-      case s: org.apache.spark.sql.types.StructType
+      case s: StructType
         if s.fieldNames.contains("start") && s.fieldNames.contains("stop") => ()
       case other => throw new IllegalArgumentException(
         s"the $side frame's `on` column `$name` must be a struct<start,stop> interval " +
@@ -720,9 +637,7 @@ object IntervalJoin {
     * are accepted on the Range strategy only (widened to double internally);
     * anything else is rejected up front rather than failing inside a stats
     * pass. */
-  private def endpointType(df: DataFrame, name: String, side: String)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
+  private def endpointType(df: DataFrame, name: String, side: String): DataType = {
     val s = df.schema(name).dataType.asInstanceOf[StructType]
     val ts = Seq("start", "stop").map(f => s(f).dataType)
     ts match {
@@ -735,23 +650,17 @@ object IntervalJoin {
     }
   }
 
-  private def isFloating(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt == FloatType || dt == DoubleType
-  }
+  private def isFloating(dt: DataType): Boolean = dt == FloatType || dt == DoubleType
 
   /** Internal join representation for a declared endpoint type: long ticks
     * for integral endpoints, double for floating ones; None = no conversion
     * needed. */
-  private def internalTypeOf(declared: Option[org.apache.spark.sql.types.DataType])
-      : Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
+  private def internalTypeOf(declared: Option[DataType]): Option[DataType] =
     declared match {
       case Some(dt) if isFloating(dt) && dt != DoubleType => Some(DoubleType)
       case Some(dt) if !isFloating(dt) && dt != LongType  => Some(LongType)
       case _ => None
     }
-  }
 
   /** DataFrames.jl-style `makeunique`: duplicate names get `_1`, `_2`, ...
     * suffixes; without the flag duplicates are an error

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types._
   * reference's home domain) degrades toward all-partitions replication:
   * at cluster range counts (512-4096) a few % of domain-length rows can
   * inflate the shuffle by an order of magnitude. Intervals that would
-  * replicate more than `Options.sweepMaxReplication` range partitions
+  * replicate more than `MaxReplication` (16) range partitions
   * (auto threshold = that many typical range widths; explicit override
   * via `Options.sweepLongThreshold`) are routed to BROADCAST side-joins
   * instead of the sweep: long-left × ALL right and short-left ×
@@ -53,6 +53,10 @@ import org.apache.spark.sql.types._
   * variants use the binned path.
   */
 object SweepJoin {
+
+  /** Auto fat-tail bound: an interval is long when it would replicate to
+    * more than this many range partitions. */
+  private val MaxReplication = 16
 
   /** Bounded reservoir of (start, stop) pairs: `k` rows per input
     * partition, one narrow pass, collect size = k × partitions regardless
@@ -93,40 +97,31 @@ object SweepJoin {
 
   /** Auto long-interval threshold: the REPLICATION bound. A row of length
     * L replicates to ~L/avgRangeWidth partitions, so "long" means
-    * L > maxReplication × the typical range width — the semantic the
+    * L > MaxReplication × the typical range width — the semantic the
     * split exists for (a quantile rule misfires when the tail is heavy:
     * with 5% giants the p99 length lands INSIDE the giant mass and only
     * clips its top). Long.MaxValue (= never long, pure sweep, zero extra
     * jobs) when no SAMPLED row exceeds the bound — every short-span
     * fixture takes that exit, plan unchanged. */
   private[operators] def autoLongThreshold(sample: Array[(Long, Long)],
-      bounds: Array[Long], maxReplication: Int): Long = {
+      bounds: Array[Long]): Long = {
     if (bounds.isEmpty || sample.isEmpty) return Long.MaxValue
     val starts = sample.map(_._1)
     val span = starts.max - starts.min
     if (span <= 0) return Long.MaxValue
     val avgWidth = math.max(1L, span / (bounds.length + 1))
-    val t = maxReplication.toLong * avgWidth
+    val t = MaxReplication.toLong * avgWidth
     if (sample.exists { case (s, e) => e > s && e - s > t }) t else Long.MaxValue
   }
 
-  /** pid of the range containing x: #bounds <= x. */
+  /** pid of the range containing x: #bounds <= x (bounds are distinct). */
   private def pidOf(bounds: Array[Long], x: Long): Int = {
     val i = JArrays.binarySearch(bounds, x)
-    if (i >= 0) {
-      // bounds may contain duplicates pre-`distinct`; binarySearch returns
-      // SOME matching index — advance past equal values for "count <= x"
-      var j = i
-      while (j < bounds.length && bounds(j) <= x) j += 1
-      j
-    } else -(i + 1)
+    if (i >= 0) i + 1 else -(i + 1)
   }
 
   /** Inner overlap join of the temp-named projected frames (same contract
     * as the other strategies: output columns = l2.columns ++ r2.columns). */
-  def sweepInner(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String): DataFrame =
-    sweepInner(l2, r2, lOnT, rOnT, IntervalJoin.Options())
-
   def sweepInner(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
       opts: IntervalJoin.Options): DataFrame = {
     val spark = l2.sparkSession
@@ -137,7 +132,7 @@ object SweepJoin {
     val sample = samplePairs(pts, "s", "e")
     val bounds = partitionBounds(sample.map(_._1), nParts)
     val threshold = opts.sweepLongThreshold
-      .getOrElse(autoLongThreshold(sample, bounds, opts.sweepMaxReplication))
+      .getOrElse(autoLongThreshold(sample, bounds))
 
     def isLong(onT: String): Column = {
       val st = col(s"$onT.start"); val sp = col(s"$onT.stop")
@@ -228,7 +223,7 @@ object SweepJoin {
     val swept = sorted.mapPartitions { it =>
       new Iterator[Row] {
         // (stop, payload) actives per side, evicted by ascending stop
-        final class Active(val e: Long, val s: Long, val payload: Row)
+        final class Active(val e: Long, val payload: Row)
         val ord = new java.util.Comparator[Active] {
           def compare(a: Active, b: Active): Int = java.lang.Long.compare(a.e, b.e)
         }
@@ -271,7 +266,7 @@ object SweepJoin {
                 pending += (if (side == 0) (mine, o.payload) else (o.payload, mine))
               }
             }
-            (if (side == 0) lAct else rAct).add(new Active(e, s, mine))
+            (if (side == 0) lAct else rAct).add(new Active(e, mine))
           }
         }
 
