@@ -3,39 +3,16 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  /** The one session configuration both measurement mains share — BenchProbe
-    * numbers are only comparable to Bench's if every conf matches. */
-  private[graft] def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Shuffles START wide and AQE coalesces them down to the advisory
-      // target: small inputs still end at a handful of partitions, while
-      // a 64x input keeps enough width that hash aggregates stop
-      // spilling — the q78/q84 probe at 64x measured 9.4x growth for 4x
-      // data through a fixed 32-wide shuffle, ~4x with the wide start.
-      // 128 (not 512): the wide start is not free locally — each map
-      // task writes that many shuffle partitions, and at 512 the
-      // many-small-query suite paid ~13 s total (~0.1 s/query); 128
-      // keeps ~1.4 M rows/partition at the 64x probe (in-memory hash
-      // agg) at a quarter of that overhead. The production posture: let
-      // AQE pick the width at runtime instead of pinning it to cores.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "128")
-      // Codegen class cache (STATIC conf, default 100 entries): the suite
-      // generates well over 100 distinct wholestage classes per pass, so
-      // the LRU thrashed and passes 2..N re-compiled (janino) nearly every
-      // stage they had already compiled. Scale-independent: any workload
-      // with >100 distinct plan shapes wants this; memory cost is weak-ref
-      // class metadata only.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  /** Materializes every output row in full — a plain df.count() lets
+    * Catalyst prune the projection, hiding the cost of queries whose work
+    * IS the projected expressions. */
+  private[graft] def materialize(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** `body`'s value and its wall seconds. */
+  private[graft] def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Runs every query `reps` times at `dir` and returns the per-query MIN
@@ -47,13 +24,8 @@ object Bench {
     val best = mutable.HashMap.empty[String, Double]
     val failed = mutable.LinkedHashSet.empty[String]
     for (_ <- 1 to reps; (name, fn) <- queries if !failed(name)) {
-      val t0 = System.nanoTime()
       try {
-        // toRdd.count() materializes every output row in full — a plain
-        // df.count() lets Catalyst prune the projection, hiding the cost of
-        // queries whose work IS the projected expressions
-        fn(spark, dir).queryExecution.toRdd.count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (_, sec) = timed(materialize(fn(spark, dir)))
         best(name) = best.get(name).fold(sec)(math.min(_, sec))
       } catch {
         case NonFatal(e) =>
@@ -67,7 +39,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = buildSession()
+    val spark = Session.build()
     // Steady-state measurement: run the FULL query set once at the smallest
     // SF first. The plan shapes are identical across SFs, so this warms every
     // cold path the measured run would otherwise absorb into whichever query
@@ -120,7 +92,8 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       s"""{"sf":"$sfDir","agg":"min-of-$reps-passes","total_sec":${f(total)},"queries":$longLine}""" + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] BENCH_DETAIL.json not written: $e") }
     // Machine line: the driver captures only the last ~2000 chars of stdout,
     // so the full 220-entry map can never fit (rounds 1-11 all recorded
     // parsed=null). Emit the total plus the SLOWEST queries — the ones any

@@ -29,7 +29,7 @@ object IvfScaleBench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val baseLists = 16
     val nProbe = 4
-    val spark = Bench.buildSession()
+    val spark = Session.build()
     ScaleUpBench.buildScaled(spark, srcDir, outDir, factor)
 
     def run(dir: String, fac: Int, regime: String): Unit = {

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -132,7 +133,7 @@ object ScaleUpBench {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale$factor")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = Bench.buildSession()
+    val spark = Session.build()
     buildScaled(spark, srcDir, outDir, factor)
 
     // a query that fails in ANY measured rep must not emit a normal-looking
@@ -141,7 +142,7 @@ object ScaleUpBench {
     def measure(dir: String): Map[String, Either[String, Double]] = {
       targets.foreach { n => // warm pass (codegen, readers, index builds)
         try SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count()
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[scaleup] warm $n @ $dir failed: ${e.getMessage}") }
       }
       (1 to reps).map { rep =>
@@ -151,7 +152,7 @@ object ScaleUpBench {
             try {
               SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count()
               Right((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
+            } catch { case NonFatal(e) =>
               System.err.println(
                 s"[scaleup] rep $rep $n @ $dir failed: ${e.getMessage}")
               Left(Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,7 +34,7 @@ object SparkEntry {
   private def s(session: SparkSession): SparkSession = {
     // legacy conf is runtime-settable; harmless if already set by the builder
     try session.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     session
   }
 

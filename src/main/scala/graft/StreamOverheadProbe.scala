@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object StreamOverheadProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val sp = Bench.buildSession()
+    val sp = Session.build()
     import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev probe: the SweepJoin long/short split on an ADVERSARIAL fat-tail
@@ -22,12 +22,8 @@ object SweepFatTailBench {
   def main(args: Array[String]): Unit = {
     val factors = args.headOption.getOrElse("1,4,16")
       .split(",").toSeq.map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 512) // cluster-like range count
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Session.build()
+    spark.conf.set("spark.sql.shuffle.partitions", 512) // cluster-like range count
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.IntervalJoin
     import graft.operators.IntervalJoin.{Options, Strategy}

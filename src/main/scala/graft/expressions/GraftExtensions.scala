@@ -9,8 +9,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 
 /** Column wrappers + SQL registration for the native expressions.
   *
-  * Register on the session builder:
-  * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
+  * Register on a `SparkSession.Builder`:
+  * {{{ builder.withExtensions(new GraftExtensions) }}}
   * or via config: `spark.sql.extensions=graft.expressions.GraftExtensions`,
   * then `SELECT dot_product(a, b)`, `interval_overlaps(x, y)`,
   * `interval_intersect(x, y)` work from plain SQL.

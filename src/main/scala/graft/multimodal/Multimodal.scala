@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -129,7 +130,7 @@ object Multimodal {
     try {
       javax.imageio.ImageIO.setUseCache(false)
       Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(data)))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Pixel-level features: `decoded` says whether a real reader accepted

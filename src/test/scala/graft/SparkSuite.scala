@@ -4,21 +4,15 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession + the reference-shaped fixture (FIXTURES.md F1):
+/** The shared [[Session.build]] session + the reference-shaped fixture
+  * (FIXTURES.md F1):
   * 100 contiguous spans with Gamma(3,2)-second durations, label ∈ a..d,
   * x ~ U(0,1). Deterministic; exact values need not match Julia's RNG —
   * every reference assertion is an invariant or self-equivalence
   * (SURVEY §5), not a golden value.
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build()
 
   def spanSchema: StructType = StructType(Seq(
     StructField("start", LongType, nullable = false),
