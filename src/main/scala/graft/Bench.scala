@@ -37,6 +37,33 @@ object Bench {
     (best.toMap, failed.toSeq)
   }
 
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The machine line, the last line of Bench's stdout. The harness that
+    * records a run keeps only the LAST 2000 characters of stdout and parses
+    * this line out of that window, and sbt appends its own `[success] Total
+    * time` line after it, so the full 220-entry map can never fit (rounds
+    * 1-11 all recorded parsed=null). It carries the total plus the SLOWEST
+    * queries — the ones any regression check cares about — by full name
+    * at 2 dp, growing the list only while the line stays under 1500
+    * chars. n_queries/queries_shown make the truncation explicit;
+    * BENCH_DETAIL.json holds the full split. Failed queries are listed by
+    * full name. */
+  private[graft] def machineLine(results: Map[String, Double], failed: Seq[String],
+      reps: Int, sfDir: String): String = {
+    val slowest = results.toSeq.sortBy { case (n, v) => (-v, n) }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def mkLine(k: Int): String = {
+      val qs = slowest.take(k).map { case (n, v) => "\"" + n + "\":" + f2(v) }
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${f3(results.values.sum)},"unit":"sec","agg":"min-of-$reps-passes","n_queries":${results.size},"failed":$failedJson,"queries_shown":$k,"queries":$qs,"sf":"$sfDir"}"""
+    }
+    var k = math.min(40, slowest.size)
+    while (k > 0 && mkLine(k).length > 1500) k -= 1
+    mkLine(k)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.build()
@@ -72,50 +99,19 @@ object Bench {
     // "failed" and left out of the timings and the total
     val failed = (warmFailed ++ passFailed).distinct.sorted
     val results = timed -- failed
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // The driver captures only the LAST 2000 characters of stdout and parses
-    // the metric line out of that window. Rounds 1-6 all recorded
-    // parsed=null because the full-name per-query map pushed the line past
-    // 2000 chars, truncating its head out of the window. So: the machine
-    // line uses the short qNN key (unique by construction; fall back to the
-    // full name on a collision) at 3 decimals — 78 queries ≈ 1.0 kB — and
-    // the full-name map goes on its OWN earlier line for humans, where
-    // truncation costs nothing.
-    val longLine = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
+    val longLine = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     println(s"""{"detail":"full-name per-query seconds","queries":$longLine}""")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // The suite outgrew the driver's 2000-char stdout window (the short-key
-    // map alone passed 1800 chars at 140+ queries, so the machine line now
-    // falls back to the headline total) — persist the full per-query split
-    // where truncation can't reach it. BASELINE.md cites this file.
+    // The suite outgrew the 2000-char stdout window (the per-query
+    // map alone passed 1800 chars at 140+ queries, so the machine line
+    // shows only the slowest) — persist the full per-query split where
+    // truncation can't reach it. BASELINE.md cites this file.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      s"""{"sf":"$sfDir","agg":"min-of-$reps-passes","total_sec":${f(total)},"queries":$longLine}""" + "\n")
+      s"""{"sf":"$sfDir","agg":"min-of-$reps-passes","total_sec":${f3(results.values.sum)},"queries":$longLine}""" + "\n")
     catch { case NonFatal(e) =>
       System.err.println(s"[bench] BENCH_DETAIL.json not written: $e") }
-    // Machine line: the driver captures only the last ~2000 chars of stdout,
-    // so the full 220-entry map can never fit (rounds 1-11 all recorded
-    // parsed=null). Emit the total plus the SLOWEST queries — the ones any
-    // regression check cares about — under short keys (qNN, unique by
-    // construction; full names on collision) at 2 dp, growing the list only
-    // while the line stays under 1500 chars. n_queries/queries_shown make
-    // the truncation explicit; BENCH_DETAIL.json holds the full split.
-    // Failed queries are listed by full name.
-    def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val short = results.toSeq.map { case (k, v) => k.takeWhile(_ != '_') -> v }
-    val keyed =
-      if (short.map(_._1).toSet.size == results.size) short else results.toSeq
-    val slowest = keyed.sortBy(-_._2)
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def mkLine(k: Int): String = {
-      val qs = slowest.take(k).map { case (n, v) => "\"" + n + "\":" + f2(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","agg":"min-of-$reps-passes","n_queries":${results.size},"failed":$failedJson,"queries_shown":$k,"queries":$qs,"sf":"$sfDir"}"""
-    }
-    var k = math.min(40, slowest.size)
-    while (k > 0 && mkLine(k).length > 1500) k -= 1
-    println(mkLine(k))
+    println(machineLine(results, failed, reps, sfDir))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -104,12 +104,22 @@ object StreamOverheadProbe {
       ("merge", "1", false),
       ("gaps", "8", true), ("gaps", "2", true), ("gaps", "2", false),
       ("gaps", "1", false))
+    // every arm of a shape must emit what its first arm did: a flush batch
+    // that emits nothing must not pass as a speed-up
+    val firstRows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    var mismatch = false
     for (rep <- 1 to 2; (shape, parts, nd) <- arms) {
       val t0 = System.nanoTime()
       val n = replay(parts, nd, shape, batches, s"$shape-p$parts-nd$nd-rep$rep")
       println(f"TOTAL shape=$shape parts=$parts noData=$nd rep=$rep " +
         f"${(System.nanoTime() - t0) / 1e9}%.3f s rows=$n")
+      val want = firstRows.getOrElseUpdate(shape, n)
+      if (n != want) {
+        println(s"MISMATCH shape=$shape parts=$parts noData=$nd rep=$rep rows=$n, first arm rows=$want")
+        mismatch = true
+      }
     }
     sp.stop()
+    if (mismatch) sys.exit(1)
   }
 }

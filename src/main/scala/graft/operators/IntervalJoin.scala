@@ -106,7 +106,8 @@ object IntervalJoin {
         * broadcast side-joins instead of replicating across every range
         * partition they span (SweepJoin's long/short split). None = auto:
         * long means "would replicate to more than 16 range partitions"
-        * (length > that many typical range widths); when no
+        * (length > that many typical range widths, where the range count
+        * is one per core, more past ~1M sampled rows per core); when no
         * sampled row exceeds the bound — every short-span fixture — the
         * split never engages and the plan is the pure sweep, unchanged. */
       sweepLongThreshold: Option[Long] = None,

@@ -13,11 +13,15 @@ import org.apache.spark.sql.types._
   * per-partition sweep.
   *
   * Shape:
-  *  1. one stats pass picks BALANCED partition bounds = approximate
-  *     quantiles of all interval starts (so dense time regions get more
-  *     partitions — immune to start-domain skew, unlike fixed-width bins);
-  *  2. each interval replicates to every partition range it overlaps
-  *     (typically 1-2 — same replication factor as the binned strategy);
+  *  1. one sample pass counts the input rows and draws a bounded
+  *     reservoir of (start, stop) pairs; the range count is one per core
+  *     (`defaultParallelism`), more only past `RowsPerRange` rows per
+  *     core — never `spark.sql.shuffle.partitions`. The range bounds are
+  *     approximate quantiles of the sampled starts, so dense time regions
+  *     get more ranges — immune to start-domain skew, unlike fixed-width
+  *     bins;
+  *  2. each interval replicates to every range it overlaps (typically
+  *     1-2 — same replication factor as the binned strategy);
   *  3. within each partition, rows stream in (start) order through ONE
   *     merge sweep holding stop-ordered active lists per side: each
   *     arriving row pairs with every live opposite row, evicting actives
@@ -32,7 +36,8 @@ import org.apache.spark.sql.types._
   * partitions replicates k× — fine for short-span data (1-2×), but a
   * fat-tailed length distribution (real biosignal/session spans — the
   * reference's home domain) degrades toward all-partitions replication:
-  * at cluster range counts (512-4096) a few % of domain-length rows can
+  * once the range count is in the hundreds (hundreds of cores, or
+  * hundreds of millions of rows) a few % of domain-length rows can
   * inflate the shuffle by an order of magnitude. Intervals that would
   * replicate more than `MaxReplication` (16) range partitions
   * (auto threshold = that many typical range widths; explicit override
@@ -58,17 +63,29 @@ object SweepJoin {
     * more than this many range partitions. */
   private val MaxReplication = 16
 
-  /** Bounded reservoir of (start, stop) pairs: `k` rows per input
-    * partition, one narrow pass, collect size = k × partitions regardless
-    * of data volume — unlike a fraction-based sample, this stays
-    * driver-safe at any scale. Per-partition reservoirs slightly bias
-    * toward small partitions; for partition bounds and a length quantile a
-    * ~2x approximation is ample — residual imbalance only shifts work
-    * between ranges/branches, never correctness. Measured ~4x cheaper
-    * than approxQuantile on the same input. */
+  /** Rows per sweep range, by per-task sort memory. Each range is one
+    * sort-and-sweep task whose packed rows (endpoints plus both sides'
+    * payload structs, ~100-200 B each) sort in Spark's execution memory:
+    * 1M rows is ~100-200 MB of sort buffer, inside one task's share of a
+    * modest executor ((4 GB - 300 MB) × 0.6 unified memory / 4 cores
+    * ≈ 570 MB) with room for the 1-2× replication, so a range this size
+    * sorts without spilling. Smaller ranges only add tasks once every core
+    * has one. */
+  private[operators] val RowsPerRange = 1L << 20
+
+  /** Bounded reservoir of (start, stop) pairs, and the input's row count:
+    * `k` rows per input partition, one narrow pass, collect size =
+    * k × partitions regardless of data volume — unlike a fraction-based
+    * sample, this stays driver-safe at any scale. Per-partition
+    * reservoirs slightly bias toward small partitions; for partition
+    * bounds and a length quantile a ~2x approximation is ample — residual
+    * imbalance only shifts work between ranges/branches, never
+    * correctness. Measured ~4x cheaper than approxQuantile on the same
+    * input. */
   private[operators] def samplePairs(df: DataFrame, sCol: String, eCol: String,
-      perPartition: Int = 64): Array[(Long, Long)] = {
-    df.select(col(sCol), col(eCol))
+      perPartition: Int = 64): (Array[(Long, Long)], Long) = {
+    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+    val got = df.select(col(sCol), col(eCol))
       .where(col(sCol).isNotNull && col(eCol).isNotNull) // checkMissing=false
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
       .mapPartitions { it =>
@@ -80,10 +97,22 @@ object SweepJoin {
           else { val j = rng.nextInt(n + 1); if (j < perPartition) buf(j) = x }
           n += 1
         }
-        buf.take(math.min(n, perPartition)).iterator
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+        // the partition's row count rides on its first sampled pair
+        buf.iterator.take(math.min(n, perPartition)).zipWithIndex
+          .map { case ((s, e), i) => (s, e, if (i == 0) n.toLong else 0L) }
+      }(enc)
       .collect()
+    (got.map(t => (t._1, t._2)), got.iterator.map(_._3).sum)
   }
+
+  /** Sweep range count: one range per core, more only once the input
+    * outgrows `RowsPerRange` per core. Sized from the data and the
+    * cluster, not from `spark.sql.shuffle.partitions`: the range shuffle
+    * is a `repartition(n, pid)`, which AQE never coalesces, so that conf
+    * (200 by default) would schedule as many sort-and-sweep tasks at any
+    * input size. */
+  private[operators] def rangeCount(rows: Long, parallelism: Int): Int =
+    math.max(parallelism.toLong, (rows + RowsPerRange - 1) / RowsPerRange).toInt
 
   /** Balanced partition bounds = approximate quantiles of the sampled
     * starts. */
@@ -124,12 +153,10 @@ object SweepJoin {
     * as the other strategies: output columns = l2.columns ++ r2.columns). */
   def sweepInner(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
       opts: IntervalJoin.Options): DataFrame = {
-    val spark = l2.sparkSession
-    val nParts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-
     val pts = l2.select(col(s"$lOnT.start").as("s"), col(s"$lOnT.stop").as("e"))
       .unionAll(r2.select(col(s"$rOnT.start").as("s"), col(s"$rOnT.stop").as("e")))
-    val sample = samplePairs(pts, "s", "e")
+    val (sample, rows) = samplePairs(pts, "s", "e")
+    val nParts = rangeCount(rows, l2.sparkSession.sparkContext.defaultParallelism)
     val bounds = partitionBounds(sample.map(_._1), nParts)
     val threshold = opts.sweepLongThreshold
       .getOrElse(autoLongThreshold(sample, bounds))
