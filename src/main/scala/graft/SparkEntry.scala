@@ -576,7 +576,7 @@ object SparkEntry {
       // repartition first: documents is a single file, and the interpreted
       // transform would otherwise run on one core
       val g = table(sp, dir, "documents")
-        .repartition(sp.sessionState.conf.numShufflePartitions)
+        .repartition(sp.sparkContext.defaultParallelism)
         .select(col("doc_id"), TF.shingles(col("text"), 3).as("sh"))
         .localCheckpoint(true)
       val a = g.select(col("doc_id").as("doc_a"), col("sh").as("sa"))
@@ -597,7 +597,7 @@ object SparkEntry {
       // one-pass imperative simhash (bit-identical to the Column path),
       // materialized once before the banded self-join
       val sh = Dedup.simhashFast(table(sp, dir, "documents"), "text", "doc_id")
-        .repartition(sp.sessionState.conf.numShufflePartitions)
+        .repartition(sp.sparkContext.defaultParallelism)
         .localCheckpoint(true)
       val pairs = Dedup.simhashNearDupPairs(sh, maxDist = 2, bands = 4)
       Dedup.connectedComponents(pairs, sh.select(col("id")))
@@ -1568,7 +1568,7 @@ object SparkEntry {
     // symmetric Jaccard dilutes. Same materialize-once shingle discipline.
     "q97_containment" -> ((sp, dir) => {
       val g = table(sp, dir, "documents")
-        .repartition(sp.sessionState.conf.numShufflePartitions)
+        .repartition(sp.sparkContext.defaultParallelism)
         .select(col("doc_id"), TF.shingles(col("text"), 3).as("sh"))
         .localCheckpoint(true)
       val a = g.select(col("doc_id").as("doc_a"), col("sh").as("sa"))
@@ -1671,7 +1671,7 @@ object SparkEntry {
       val f = Dedup.signaturesWithShingles(
           table(sp, dir, "documents").where(length(col("text")) >= 5),
           "text", "doc_id")
-        .repartition(sp.sessionState.conf.numShufflePartitions)
+        .repartition(sp.sparkContext.defaultParallelism)
         .localCheckpoint(true)
       val a = f.select(col("id").as("doc_a"), col("sig").as("siga"),
         col("sh").as("sa"))
@@ -1847,7 +1847,7 @@ object SparkEntry {
     // up to (cluster_size, n_clusters) — the dedup-savings estimate.
     "q138_cluster_sizes" -> ((sp, dir) => {
       val sh = Dedup.simhashFast(table(sp, dir, "documents"), "text", "doc_id")
-        .repartition(sp.sessionState.conf.numShufflePartitions)
+        .repartition(sp.sparkContext.defaultParallelism)
         .localCheckpoint(true)
       val pairs = Dedup.simhashNearDupPairs(sh, maxDist = 2, bands = 4)
       Dedup.connectedComponents(pairs, sh.select(col("id")))
@@ -2163,7 +2163,7 @@ object SparkEntry {
     // counterpart of q54's detection).
     "q165_cluster_split" -> ((sp, dir) => {
       val sh = Dedup.simhashFast(table(sp, dir, "documents"), "text", "doc_id")
-        .repartition(sp.sessionState.conf.numShufflePartitions)
+        .repartition(sp.sparkContext.defaultParallelism)
         .localCheckpoint(true)
       val pairs = Dedup.simhashNearDupPairs(sh, maxDist = 2, bands = 4)
       val clusters = Dedup.connectedComponents(pairs, sh.select(col("id")))
@@ -2259,7 +2259,7 @@ object SparkEntry {
     "q172_leakage_audit" -> ((sp, dir) => {
       val fr = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
       val sh = Dedup.simhashFast(table(sp, dir, "documents"), "text", "doc_id")
-        .repartition(sp.sessionState.conf.numShufflePartitions)
+        .repartition(sp.sparkContext.defaultParallelism)
         .localCheckpoint(true)
       // the banded pair join feeds CC and BOTH audits — materialize it
       // once (pair sets are output-bounded, tiny next to the corpus)

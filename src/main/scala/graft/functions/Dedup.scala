@@ -1243,10 +1243,10 @@ object Dedup {
     // initial coalesce width from the LOGICAL plan (a `.rdd` here forces
     // physical planning of the pairs subtree outside AQE — the Scans
     // issue, same class). The pairs frame is a post-shuffle subtree, so
-    // the estimate saturates and the session shuffle width is the bound.
+    // the estimate saturates and the core count is the bound.
     var parts = math.min(
       graft.sources.Scans.estimatedMapParallelism(e.toDF()),
-      e.sparkSession.sessionState.conf.numShufflePartitions)
+      e.sparkSession.sparkContext.defaultParallelism)
     var stalled = false
     var pass = 0
     while (cnt > localEdgeLimit && !stalled && pass < maxIter) {
@@ -1353,7 +1353,7 @@ object Dedup {
         col("l.__pt") === col("r.__pt") && col("l.__jid") < col("r.__jid"))
       .select(col("l.__jid").as("id_a"), col("r.__jid").as("id_b"))
       .distinct()
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .localCheckpoint(true)
     val withSets = cand
       .join(ordered.select(col("__jid").as("id_a"), col("__sorted").as("__ta"),

@@ -15,8 +15,8 @@ import graft.intervals.IntervalCols._
   * ## Physical strategies (SURVEY §4.3)
   *
   * `l.start < r.stop AND r.start < l.stop` has no equi-key, so stock Spark
-  * plans it as BroadcastNestedLoopJoin (fine when one side is small — e.g. a
-  * `quantileWindows` frame) or a cartesian product (fatal for big×big).
+  * plans it as BroadcastNestedLoopJoin (fine when one side is small) or a
+  * cartesian product (fatal for big×big).
   *
   *  - [[Strategy.Range]] — emit the raw theta join and let Catalyst pick
   *    (auto-broadcasts the small side). Correct for all inputs.
@@ -29,16 +29,27 @@ import graft.intervals.IntervalCols._
   *    a sort-merge join that partitions across a cluster.
   *  - [[Strategy.Sweep]] — range-partitioned plane sweep ([[SweepJoin]]);
   *    half-open inner joins only.
-  *  - [[Strategy.Auto]] — Range when the smaller side is small in both bytes
-  *    and estimated rows (`maxRangeRows`), else Sweep for half-open inner
-  *    joins and Binned otherwise; always Range without an integral tick
-  *    space (floating or non-integral bounded endpoints).
+  *  - [[Strategy.Auto]] — for an inner join, Binned on the windows' own
+  *    grid when either `on` column carries a [[QuantileWindows]] grid hint
+  *    (outer joins keep the pick below: the binned outer plan's matched-flag
+  *    window shuffle made them slower than the broadcast nested loop against
+  *    a small window frame); else Range when the
+  *    smaller side is small in both bytes and estimated rows
+  *    (`maxRangeRows`), else Sweep for half-open inner joins and Binned
+  *    otherwise; always Range without an integral tick space (floating or
+  *    non-integral bounded endpoints).
   *
-  * Bin width is chosen from one cheap stats pass over both `on` columns
-  * (column-pruned scan): wide enough that no interval explodes to more than
-  * 1024 bins and the total bin count stays near 2^20 (fixed constants).
-  * Pass `binWidth` explicitly to skip the stats pass (recommended in
-  * production pipelines where the time scale is known).
+  * The binned plan's cells come from, in order: an explicit `binWidth`
+  * (cells `x div binWidth`); the grid hint `{lo, hi, n}` that
+  * `quantileWindows` puts on its span column (column metadata keys
+  * `graft.grid.lo`, `graft.grid.hi`, `graft.grid.n`; cells of the window
+  * width from `lo`); else one cheap stats pass over both `on` columns
+  * (column-pruned scan), wide enough that no interval explodes to more than
+  * 1024 bins and the total bin count stays near 2^20 (fixed constants). The
+  * first two run no job at build time; pass `binWidth` when the time scale
+  * is known. The grid hint is a hint, not a contract: a frame that no longer
+  * matches it (filtered, relabelled, unioned with a shifted grid) still
+  * joins exactly, only slower (see `binPlan`).
   *
   * ## One pipeline for every interval form
   *
@@ -216,7 +227,13 @@ object IntervalJoin {
       case (true, true)   => "full_outer"
     }
 
+    // quantileWindows' grid on either side: an inner join bins on it — no
+    // stats pass, and no nested loop of every span against every window
+    val grid = QuantileWindows.gridOf(left, lOnName)
+      .orElse(QuantileWindows.gridOf(right, rOnName)).flatMap(gridCell)
     val strategy = opts.strategy match {
+      case Strategy.Auto if joinType == "inner" && form.binnable && grid.isDefined =>
+        Strategy.Binned
       case Strategy.Auto if !form.binnable || rangeJoinViable(l2, r2, opts) => Strategy.Range
       // big-big: the per-partition sweep beats the binned equi-join on
       // inner joins (measured 1.4x at 29 M pairs, 2.8x at 500 M — and the
@@ -226,16 +243,18 @@ object IntervalJoin {
       case s => s
     }
 
+    def cell = opts.binWidth.map(widthCell).orElse(grid)
+      .orElse(statsCell(l2, r2, lOnT, rOnT))
     val joined = strategy match {
       case Strategy.Sweep if joinType == "inner" =>
         SweepJoin.sweepInner(l2, r2, lOnT, rOnT, opts)
       case Strategy.Binned if joinType == "inner" =>
-        binnedInner(l2, r2, lOnT, rOnT, form, opts)
+        binnedInner(l2, r2, lOnT, rOnT, form, cell)
       case Strategy.Binned | Strategy.Sweep =>
-        binnedOuter(l2, r2, lOnT, rOnT, form, joinType, opts)
+        binnedOuter(l2, r2, lOnT, rOnT, form, joinType, opts, cell)
       case _ =>
         // Theta join; Catalyst broadcasts the small side (BNLJ) — right for
-        // the reference's canonical small-window workloads.
+        // a small frame without a grid hint.
         l2.join(r2, form.overlap(col(lOnT), col(rOnT)), joinType)
     }
 
@@ -437,17 +456,43 @@ object IntervalJoin {
   private val TargetBins = 1L << 20
   private val MaxBinsPerRow = 1024L
 
-  /** Shared setup for the binned strategies: one cheap stats pass picks the
-    * bin width, both sides explode to the bins they overlap, and the returned
-    * condition is the bin equi-key + overlap residual + first-overlap-bin
-    * dedup. Returns None when there are no intervals at all (both sides
-    * empty) — callers fall back to a plain theta join, which is free there.
-    *
-    * `outer = true` switches to `explode_outer` (rows with zero bins survive
-    * with a NULL bin so outer variants can keep them) and stamps each side's
-    * own first bin (`__lbin0`/`__rbin0`) for null-extension dedup. */
-  private def binPlan(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      form: Form, opts: Options, outer: Boolean): Option[(DataFrame, DataFrame, Column)] = {
+  /** A binned plan's cell function: SQL over a long tick → the tick's cell,
+    * in exact 64-bit integer arithmetic (SQL `div`), never through Double —
+    * epoch-ns magnitudes (~1.7e18) exceed Double's 53-bit mantissa. */
+  private type Cell = String => String
+
+  /** An explicit `binWidth`: cells `x div w`, a grid anchored at 0.
+    * Truncating division is monotone, so negative ticks join exactly too. */
+  private def widthCell(w: Long): Cell = {
+    require(w > 0, s"binWidth must be positive, got $w")
+    x => s"$x div ${w}L"
+  }
+
+  /** A [[QuantileWindows]] grid `(lo, hi, n)`: cells of the window width
+    * `w = (hi - lo) / n` from `lo`, every tick below `lo` in cell -1 and every
+    * tick from `hi` on in cell `ceil((hi - lo) / w)`. The clamp keeps
+    * `x - lo` inside [0, hi - lo), so nothing overflows, and no row explodes
+    * to more than `ceil((hi - lo) / w) + 2` cells; `w` is floored like the
+    * stats path's so that count stays within `TargetBins`. None when the grid
+    * has no positive span or more windows than ticks (`w == 0`): Auto then
+    * decides as it would without the hint. */
+  private def gridCell(grid: (Long, Long, Long)): Option[Cell] = {
+    val (lo, hi, n) = grid
+    val span = hi - lo // wraps negative when hi - lo overflows
+    if (n <= 0 || hi <= lo || span <= 0 || span / n == 0) None
+    else {
+      val w = math.max(span / n, ceilDiv(span, TargetBins))
+      val top = ceilDiv(span, w)
+      Some(x => s"case when $x < ${lo}L then -1L when $x >= ${hi}L then ${top}L " +
+        s"else ($x - ${lo}L) div ${w}L end")
+    }
+  }
+
+  /** One cheap stats pass picks the bin width and anchors cells at the
+    * smallest start (offsets are non-negative, so `div` == floor). None when
+    * there are no intervals at all (both sides empty) — callers fall back to
+    * a plain theta join, which is free there. */
+  private def statsCell(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String): Option[Cell] = {
     def endpoints(df: DataFrame, onT: String) =
       df.select(col(s"$onT.start").cast("long").as("s"), col(s"$onT.stop").cast("long").as("e"))
     val stats = endpoints(l2, lOnT).unionAll(endpoints(r2, rOnT))
@@ -462,15 +507,31 @@ object IntervalJoin {
     // to ~2 bins, so candidate work per bin stays near-linear in the output
     // (w = maxLen/64 was measured 17x slower at sf0.1 — 33x row replication
     // makes per-bin work quadratic), within the MaxBinsPerRow/TargetBins floors.
-    val w = opts.binWidth.getOrElse {
-      Seq(avgLen, ceilDiv(maxLen, MaxBinsPerRow), ceilDiv(span, TargetBins), 1L).max
-    }
-    // bin(x) = (x - lo) div w ; offsets are non-negative so `div` == floor.
-    // Exact 64-bit integer division (SQL `div`), never through Double —
-    // epoch-ns magnitudes (~1.7e18) exceed Double's 53-bit mantissa. The
-    // cast widens narrower bounded endpoints; on long ticks the optimizer
-    // removes it.
-    def binOf(xSql: String) = s"((cast(($xSql) as bigint)) - ${lo}L) div ${w}L"
+    val w = Seq(avgLen, ceilDiv(maxLen, MaxBinsPerRow), ceilDiv(span, TargetBins), 1L).max
+    Some(x => s"($x - ${lo}L) div ${w}L")
+  }
+
+  /** Shared setup for the binned strategies: both sides explode to the
+    * cells they overlap, and the returned condition is the cell equi-key +
+    * overlap residual + first-overlap-cell dedup.
+    *
+    * Exactness holds for ANY monotone (non-decreasing) `cell`, which is why
+    * a wrong grid hint costs only speed. A side's row explodes to every cell
+    * from `cell(start)` to `cell(last tick)`. A matching pair is kept only in
+    * `cell(greatest(l.start, r.start))`: that point lies in both intervals,
+    * so by monotonicity its cell is in both rows' cell ranges — the pair
+    * meets there — and the residual's equality to one value rejects every
+    * other cell the two rows share, so the pair is counted exactly once with
+    * no `distinct`. Nothing about the cells has to match the data.
+    *
+    * `outer = true` switches to `explode_outer` (rows with zero bins survive
+    * with a NULL bin so outer variants can keep them) and stamps each side's
+    * own first bin (`__lbin0`/`__rbin0`) for null-extension dedup. */
+  private def binPlan(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
+      form: Form, cell: Cell, outer: Boolean): (DataFrame, DataFrame, Column) = {
+    // The cast widens narrower bounded endpoints; on long ticks the
+    // optimizer removes it.
+    def binOf(xSql: String) = cell(s"(cast(($xSql) as bigint))")
     // Empty intervals overlap nothing: give them an empty bin array instead
     // of letting `sequence` count DOWN and explode one corrupt row into up
     // to TargetBins rows. Non-empty per BoundedIntervals.nonEmpty on a
@@ -496,13 +557,13 @@ object IntervalJoin {
     // r.start): dedup folded into the join residual, no `distinct` shuffle.
     val cond = col("__lbin") === col("__rbin") && form.binnedOverlap(col(lOnT), col(rOnT)) &&
       col("__lbin") === expr(binOf(s"greatest($lOnT.start, $rOnT.start)"))
-    Some((lB, rB, cond))
+    (lB, rB, cond)
   }
 
   /** Binned equi-join on overlapping fixed-width time buckets. See scaladoc. */
   private def binnedInner(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      form: Form, opts: Options): DataFrame =
-    binPlan(l2, r2, lOnT, rOnT, form, opts, outer = false) match {
+      form: Form, cell: Option[Cell]): DataFrame =
+    cell.map(binPlan(l2, r2, lOnT, rOnT, form, _, outer = false)) match {
       case None             => l2.join(r2, form.overlap(col(lOnT), col(rOnT)), "inner")
       case Some((lB, rB, c)) => lB.join(rB, c, "inner").drop("__lbin", "__rbin")
     }
@@ -523,10 +584,10 @@ object IntervalJoin {
     * All shuffles are equi-partitioned (bins, then 8-byte ids) — no nested
     * loop anywhere. */
   private def binnedOuter(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      form: Form, joinType: String, opts: Options): DataFrame = {
+      form: Form, joinType: String, opts: Options, cell: Option[Cell]): DataFrame = {
     val lId = l2.withColumn("__lid", monotonically_increasing_id())
     val rId = r2.withColumn("__rid", monotonically_increasing_id())
-    binPlan(lId, rId, lOnT, rOnT, form, opts, outer = true) match {
+    cell.map(binPlan(lId, rId, lOnT, rOnT, form, _, outer = true)) match {
       case None =>
         l2.join(r2, form.overlap(col(lOnT), col(rOnT)), joinType)
       case Some((lB, rB, cond)) =>
@@ -555,7 +616,8 @@ object IntervalJoin {
     }
   }
 
-  private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+  /** ceil(a / b) for a >= 1, b >= 1, without overflow near Long.MaxValue. */
+  private def ceilDiv(a: Long, b: Long): Long = (a - 1) / b + 1
 
   /** Auto's gate for the broadcast range/theta join: one side must be
     * broadcastable in BYTES (Spark's own threshold — handles byte-string

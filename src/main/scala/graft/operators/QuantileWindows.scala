@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
 import graft.intervals.IntervalCols
 
 /** Window generation (reference I5 `quantile_windows`,
@@ -17,8 +18,34 @@ import graft.intervals.IntervalCols
   * tolerance (`src/DataFrameIntervals.jl:341-346`, `test/runtests.jl:22-29`)
   * without any floating-point precision loss at epoch-scale magnitudes.
   * `i*(W mod n)` stays < n² so nothing overflows even for hi-lo ≈ 2^62.
+  *
+  * ## The grid hint
+  *
+  * The span column the window frame outputs carries its grid as column
+  * metadata: longs under the keys `graft.grid.lo`, `graft.grid.hi` and
+  * `graft.grid.n` (`lo`, `hi` and `n` of the call; µs ticks for timestamp
+  * windows, the join's internal tick space). `IntervalJoin` bins on that grid instead of nested-looping
+  * over the windows. The metadata is a hint, not a contract: Spark keeps it
+  * through filters, renames and unions that no longer match it, and a
+  * wrong hint costs only speed, never a row (see `IntervalJoin`'s binned
+  * plan).
   */
 object QuantileWindows {
+
+  private val GridLo = "graft.grid.lo"
+  private val GridHi = "graft.grid.hi"
+  private val GridN = "graft.grid.n"
+
+  private def gridMetadata(lo: Long, hi: Long, n: Long): Metadata =
+    new MetadataBuilder().putLong(GridLo, lo).putLong(GridHi, hi).putLong(GridN, n).build()
+
+  /** The `(lo, hi, n)` grid hint on `df`'s column `name`, if it carries one. */
+  private[graft] def gridOf(df: DataFrame, name: String): Option[(Long, Long, Long)] = {
+    val m = df.schema(name).metadata
+    if (Seq(GridLo, GridHi, GridN).forall(m.contains))
+      scala.util.Try((m.getLong(GridLo), m.getLong(GridHi), m.getLong(GridN))).toOption
+    else None
+  }
 
   /** n windows covering [lo, hi). `minDuration` is accepted-and-ignored like
     * the reference's dead `min_duration` parameter (quirk 2, SURVEY §2.1). */
@@ -41,7 +68,7 @@ object QuantileWindows {
     spark.range(n).select(
       (col("id") + 1L).as(label),
       expr(s"named_struct('start', ${boundary("id")}, 'stop', ${boundary("id + 1")})")
-        .as(spancol))
+        .as(spancol, gridMetadata(lo, hi, n)))
   }
 
   /** DataFrame method: derive the covering span from `df`'s interval column
@@ -72,8 +99,9 @@ object QuantileWindows {
         case None =>
           quantileWindows(df.sparkSession, n, 0L, 0L, spancol, label).limit(0)
       }
-      wins.select(col(label),
-        IntervalCols.timestampStructFromMicros(col(spancol), ntz).as(spancol))
+      // the grid hint stays in µs ticks, the join's internal tick space
+      wins.select(col(label), IntervalCols.timestampStructFromMicros(col(spancol), ntz)
+        .as(spancol, wins.schema(spancol).metadata))
     } else IntervalCols.coveringSpan(df, spancol) match {
       case Some((lo, hi)) =>
         quantileWindows(df.sparkSession, n, lo, hi, spancol, label, minDuration)

@@ -168,8 +168,15 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("Auto strategy: small side -> theta/broadcast; big-big -> sweep (inner) / binned (outer)") {
-    val small = IntervalJoin.intervalJoin(df, quarters, "span")
+    // a fresh struct carries no grid hint: the small side broadcasts
+    val plain = quarters.select(col("quarter"),
+      struct(col("span.start").as("start"), col("span.stop").as("stop")).as("span"))
+    val small = IntervalJoin.intervalJoin(df, plain, "span")
     assert(small.queryExecution.executedPlan.toString.contains("NestedLoop"))
+    // quantileWindows' own span column carries its grid: binned, no nested loop
+    val hinted = IntervalJoin.intervalJoin(df, quarters, "span").queryExecution.executedPlan
+      .toString
+    assert(hinted.contains("sequence(") && !hinted.contains("NestedLoop"), hinted.take(500))
     // force tiny broadcast threshold so both sides count as big
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {

@@ -14,16 +14,18 @@ class PlanShapeSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   /** queries whose plan legitimately contains a BroadcastNestedLoopJoin at
-    * this SF: interval joins against a tiny window frame (Auto strategy
-    * broadcasts; flips to the binned equi-join when both sides are big —
-    * pinned by IntervalJoinSpec's Auto test) and the two deliberate
-    * all-pairs brute-force baselines. */
+    * this SF: outer interval joins against a tiny window frame, and joins
+    * against a tiny frame without a grid hint (Auto strategy broadcasts;
+    * flips to the binned equi-join when both sides are big — pinned by
+    * IntervalJoinSpec's Auto test), and the two deliberate all-pairs
+    * brute-force baselines. Inner joins against `quantileWindows` frames bin
+    * on the windows' grid and must not appear here. */
   private val bnljOk = Set(
-    "q02_interval_join_inner", "q03_interval_join_left", "q04_interval_join_right",
-    "q05_interval_join_full", "q07_grouped_interval_join", "q32_interval_join_ts",
-    "q101_near_join", // q02's window broadcast with the frame expanded by d
-    // the same tiny sparse-window broadcast, anti/semi variants
-    "q118_interval_anti", "q119_interval_semi",
+    "q03_interval_join_left", "q04_interval_join_right", "q05_interval_join_full",
+    // windows expanded by d: a recomputed span column carries no grid hint
+    "q101_near_join",
+    // the same tiny sparse-window broadcast, anti (keepleft) variant
+    "q118_interval_anti",
     "q15_ann_brute", "q30_embed_neardup_baseline",
     // single-row corpus-count broadcast (tf-idf idf factor / surprisal N /
     // the HLL estimate row x exact-distinct row / BM25's (N, avgdl) row)
