@@ -106,12 +106,6 @@ package object api {
       functions.Dedup.nearDupPairs(df, textCol, idCol,
         k = 16, bands = 4, shingleN = 5, threshold = threshold)
 
-    /** Write this frame parquet Z-ORDERED on two dimensions (tight per-file
-      * min/max on BOTH — see [[sources.ZOrderLayout]]). */
-    def zOrderedTo(path: String, xCol: String, yCol: String,
-        bits: Int = 20, numFiles: Int = 200): Unit =
-      sources.ZOrderLayout.writeZOrdered(df, path, xCol, yCol, bits, numFiles)
-
     /** Plan-shape facts for CI gates ([[plans.PlanAudit]]). */
     def planAudit: plans.PlanAudit.Audit = plans.PlanAudit.audit(df)
   }

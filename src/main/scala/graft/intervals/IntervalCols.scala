@@ -30,9 +30,6 @@ object IntervalCols {
     */
   def normalize(c: Column): Column = interval(c.getField("start"), c.getField("stop"))
 
-  /** Interval from a nanosecond-timestamp pair already stored as longs. */
-  def intervalNs(startNs: Column, stopNs: Column): Column = interval(startNs, stopNs)
-
   /** Interval from Spark `TimestampType` endpoints, converted to long ns
     * (µs precision ×1000 — TimestampType is µs; ns loss rules documented). */
   def intervalFromTimestamps(startTs: Column, stopTs: Column): Column =
@@ -167,14 +164,6 @@ object IntervalCols {
   }
 
   def duration(i: Column): Column = stop(i) - start(i)
-
-  /** Duration in (double) seconds — convenient for weighted aggregates. */
-  def durationSec(i: Column): Column = duration(i).cast("double") / 1e9
-
-  /** Covering-span aggregate expressions (reference I6 `dfspan`,
-    * `src/DataFrameIntervals.jl:380-387`): min start / max stop of a column. */
-  def spanAgg(i: Column): Seq[Column] =
-    Seq(min(start(i)).as("start"), max(stop(i)).as("stop"))
 
   /** Collect the covering span of `df`'s interval column to the driver
     * (2 longs — the only driver-side materialization in the library).

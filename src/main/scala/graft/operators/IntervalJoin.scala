@@ -44,8 +44,9 @@ import graft.intervals.IntervalCols._
   * `quantileWindows` puts on its span column (column metadata keys
   * `graft.grid.lo`, `graft.grid.hi`, `graft.grid.n`; cells of the window
   * width from `lo`); else one cheap stats pass over both `on` columns
-  * (column-pruned scan), wide enough that no interval explodes to more than
-  * 1024 bins and the total bin count stays near 2^20 (fixed constants). The
+  * (column-pruned scan) picks a width, wide enough that no interval explodes
+  * to more than 1024 bins and the total bin count stays near 2^20 (fixed
+  * constants), and cells are `x div` that width. The
   * first two run no job at build time; pass `binWidth` when the time scale
   * is known. The grid hint is a hint, not a contract: a frame that no longer
   * matches it (filtered, relabelled, unioned with a shifted grid) still
@@ -488,27 +489,28 @@ object IntervalJoin {
     }
   }
 
-  /** One cheap stats pass picks the bin width and anchors cells at the
-    * smallest start (offsets are non-negative, so `div` == floor). None when
-    * there are no intervals at all (both sides empty) — callers fall back to
-    * a plain theta join, which is free there. */
+  /** One cheap stats pass picks the bin width; cells are [[widthCell]]'s
+    * `x div w`. Lengths and the span are taken in `decimal(20,0)` and clamped
+    * into `Long`, so no span, however wide, overflows (under ANSI mode a long
+    * `e - s` over `[Long.MinValue, Long.MaxValue)` throws). None when there
+    * are no intervals at all (both sides empty) — callers fall back to a plain
+    * theta join, which is free there. */
   private def statsCell(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String): Option[Cell] = {
     def endpoints(df: DataFrame, onT: String) =
       df.select(col(s"$onT.start").cast("long").as("s"), col(s"$onT.stop").cast("long").as("e"))
+    def dec(c: String) = col(c).cast("decimal(20,0)")
+    val len = dec("e") - dec("s")
     val stats = endpoints(l2, lOnT).unionAll(endpoints(r2, rOnT))
-      .agg(min("s"), max("e"), max(col("e") - col("s")), avg(col("e") - col("s"))).head()
+      .agg(max(len), avg(len), max(dec("e")) - min(dec("s"))).head()
     if (stats.isNullAt(0)) return None
-    val lo = stats.getLong(0)
-    val hi = stats.getLong(1)
-    val maxLen = math.max(stats.getLong(2), 1L)
-    val avgLen = math.max(math.ceil(stats.getDouble(3)).toLong, 1L)
-    val span = math.max(hi - lo, 1L)
+    val Seq(maxLen, avgLen, span) = (0 to 2).map(i =>
+      BigDecimal(stats.getDecimal(i)).setScale(0, BigDecimal.RoundingMode.CEILING)
+        .max(BigDecimal(1)).min(BigDecimal(Long.MaxValue)).toLong)
     // Bin width ~ the average interval length: each interval then explodes
     // to ~2 bins, so candidate work per bin stays near-linear in the output
     // (w = maxLen/64 was measured 17x slower at sf0.1 — 33x row replication
     // makes per-bin work quadratic), within the MaxBinsPerRow/TargetBins floors.
-    val w = Seq(avgLen, ceilDiv(maxLen, MaxBinsPerRow), ceilDiv(span, TargetBins), 1L).max
-    Some(x => s"($x - ${lo}L) div ${w}L")
+    Some(widthCell(Seq(avgLen, ceilDiv(maxLen, MaxBinsPerRow), ceilDiv(span, TargetBins)).max))
   }
 
   /** Shared setup for the binned strategies: both sides explode to the

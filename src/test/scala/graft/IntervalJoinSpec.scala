@@ -67,6 +67,16 @@ class IntervalJoinSpec extends SparkSuite {
     assertSameRows(jr, jb2)
     val js = IntervalJoin.intervalJoin(df, quarters, "span", Options(strategy = Strategy.Sweep))
     assertSameRows(jr, js)
+    // a span wider than Long.MaxValue ticks: the binned stats pass must not
+    // overflow, explicitly Binned or as Auto's big-side full outer join
+    import spark.implicits._
+    val wide = Seq((1L, Long.MinValue, Long.MaxValue), (2L, 5L, 10L)).toDF("id", "s", "e")
+      .select(col("id"), struct(col("s").as("start"), col("e").as("stop")).as("span"))
+    val self = Options(renamecols = (_ + "_a", _ + "_b"))
+    for (o <- Seq(self.copy(strategy = Strategy.Binned),
+        self.copy(keepleft = true, keepright = true, maxRangeRows = 0L)))
+      assertSameRows(IntervalJoin.intervalJoin(wide, wide, "span", o.copy(strategy = Strategy.Range)),
+        IntervalJoin.intervalJoin(wide, wide, "span", o))
   }
 
   test("keepleft: unmatched left rows survive with NULL right/intersection") {
