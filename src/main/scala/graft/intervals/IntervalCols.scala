@@ -1,7 +1,11 @@
 package graft.intervals
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
+import graft.expressions.DoubleTickKey
 
 /** Column-level algebra over half-open intervals.
   *
@@ -28,7 +32,8 @@ object IntervalCols {
     * order — the reference accepts `(:start,:stop)` and `(:stop,:start)`
     * NamedTuples, `src/DataFrameIntervals.jl:38-46`) to canonical field order.
     */
-  def normalize(c: Column): Column = interval(c.getField("start"), c.getField("stop"))
+  def normalize(c: Column, fields: Seq[String] = Seq("start", "stop")): Column =
+    struct(fields.map(f => c.getField(f).as(f)): _*)
 
   /** Interval from Spark `TimestampType` endpoints, converted to long ns
     * (µs precision ×1000 — TimestampType is µs; ns loss rules documented). */
@@ -41,12 +46,9 @@ object IntervalCols {
     * engine accepts natively (reference `backto` semantics: operator outputs
     * keep the input's representation, `src/DataFrameIntervals.jl:32-35,44-46`).
     * Mixed TZ/NTZ endpoints inside one struct are ambiguous → error. */
-  def timestampEndpointType(df: DataFrame, name: String)
-      : Option[org.apache.spark.sql.types.DataType] =
+  def timestampEndpointType(df: DataFrame, name: String): Option[DataType] =
     df.schema(name).dataType match {
-      case s: org.apache.spark.sql.types.StructType
-          if Seq("start", "stop").forall(s.fieldNames.contains) =>
-        import org.apache.spark.sql.types.{TimestampType, TimestampNTZType}
+      case s: StructType if Seq("start", "stop").forall(s.fieldNames.contains) =>
         val ts = Seq("start", "stop").map(f => s(f).dataType).filter(t =>
           t == TimestampType || t == TimestampNTZType)
         ts match {
@@ -59,9 +61,6 @@ object IntervalCols {
       case _ => None
     }
 
-  def isTimestampInterval(df: DataFrame, name: String): Boolean =
-    timestampEndpointType(df, name).isDefined
-
   /** µs-timestamp struct → long-µs tick struct (NULL-preserving). The
     * interval algebra is unit-agnostic, so timestamp intervals flow through
     * every operator as exact µs ticks — no ns multiplication/division that
@@ -69,15 +68,31 @@ object IntervalCols {
     * wall-clock µs since 1970-01-01 00:00 via `timestampdiff` — exact and
     * session-timezone-independent (a cast through TimestampType would shift
     * with the session zone). */
-  def microsFromTimestampStruct(c: Column): Column =
-    microsFromTimestampStruct(c, ntz = false)
+  def microsFromTimestampStruct(c: Column, ntz: Boolean): Column =
+    ticksOf(c, if (ntz) TimestampNTZType else TimestampType)
 
-  def microsFromTimestampStruct(c: Column, ntz: Boolean): Column = {
-    def ticks(f: Column): Column =
-      if (ntz) ntzDiffMicros(f)
-      else unix_micros(f.cast("timestamp"))
-    when(c.isNull, lit(null)).otherwise(
-      interval(ticks(c.getField("start")), ticks(c.getField("stop"))))
+  /** Order-preserving long tick of an endpoint of type `dt` — values
+    * compare in Spark SQL as their ticks do: integral types widen, dates are
+    * days, timestamps µs, floating values their IEEE sortable key
+    * ([[DoubleTickKey]]), decimals of at most 18 digits their unscaled long.
+    * None when `dt` has no 64-bit order-preserving key (strings, ...). */
+  def tickOf(dt: DataType): Option[Column => Column] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some(_.cast(LongType))
+    case DateType => Some(f => unix_date(f))
+    case TimestampType => Some(f => unix_micros(f.cast("timestamp")))
+    case TimestampNTZType => Some(ntzDiffMicros)
+    case FloatType | DoubleType =>
+      Some(f => Bridge.column(DoubleTickKey(Bridge.expression(f.cast(DoubleType)))))
+    case d: DecimalType if d.precision <= 18 =>
+      Some(f => Bridge.column(UnscaledValue(Bridge.expression(f))))
+    case _ => None
+  }
+
+  /** An interval's endpoints as the ticks of their type `dt`, which must
+    * have a key: `struct<start:long, stop:long>`, NULL for a NULL interval. */
+  def ticksOf(c: Column, dt: DataType): Column = {
+    val tick = tickOf(dt).get
+    when(c.isNull, lit(null)).otherwise(interval(tick(start(c)), tick(stop(c))))
   }
 
   /** Long-µs tick struct → µs-timestamp struct (`backto` for timestamp
@@ -85,9 +100,6 @@ object IntervalCols {
     * input representation). NULL-preserving: a NULL interval (e.g. an
     * unmatched outer-join row) stays NULL rather than becoming
     * struct(NULL, NULL). */
-  def timestampStructFromMicros(c: Column): Column =
-    timestampStructFromMicros(c, ntz = false)
-
   def timestampStructFromMicros(c: Column, ntz: Boolean): Column = {
     def back(f: Column): Column =
       if (ntz) ntzAddMicros(f)
@@ -97,22 +109,17 @@ object IntervalCols {
         back(c.getField("stop")).as("stop")))
   }
 
-  private def epochNtz: Column =
-    lit("1970-01-01 00:00:00").cast(org.apache.spark.sql.types.TimestampNTZType)
+  private def epochNtz: Column = lit("1970-01-01 00:00:00").cast(TimestampNTZType)
 
   // timestampdiff/timestampadd have no Scala-functions API (the unit is a
   // parser keyword) — build the Catalyst expressions via the bridge shim
   private def ntzDiffMicros(f: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      org.apache.spark.sql.catalyst.expressions.TimestampDiff("MICROSECOND",
-        org.apache.spark.sql.graftbridge.Bridge.expression(epochNtz),
-        org.apache.spark.sql.graftbridge.Bridge.expression(f)))
+    Bridge.column(org.apache.spark.sql.catalyst.expressions.TimestampDiff("MICROSECOND",
+      Bridge.expression(epochNtz), Bridge.expression(f)))
 
   private def ntzAddMicros(t: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      org.apache.spark.sql.catalyst.expressions.TimestampAdd("MICROSECOND",
-        org.apache.spark.sql.graftbridge.Bridge.expression(t),
-        org.apache.spark.sql.graftbridge.Bridge.expression(epochNtz)))
+    Bridge.column(org.apache.spark.sql.catalyst.expressions.TimestampAdd("MICROSECOND",
+      Bridge.expression(t), Bridge.expression(epochNtz)))
 
   /** Half-open overlap: `[a,b) ∩ [c,d) ≠ ∅  ⇔  a < d && c < b && a < b && c < d`.
     * Touching intervals (`a.stop == b.start`) do NOT overlap — bound-sensitive
@@ -132,7 +139,6 @@ object IntervalCols {
     when(l.isNull || r.isNull, lit(null)).otherwise(
       interval(greatest(start(l), start(r)), least(stop(l), stop(r))))
 
-  /** Interval width in the underlying unit (ns). */
   /** Allen's interval algebra: classify the relation of `l` to `r` as one
     * of the 13 base relations (Allen, CACM 1983) — `precedes`, `meets`,
     * `overlaps`, `finished_by`, `contains`, `starts`, `equals`,
@@ -163,6 +169,7 @@ object IntervalCols {
       .otherwise("overlapped_by")              // bs < as < be < ae
   }
 
+  /** Interval width in the underlying unit (ns). */
   def duration(i: Column): Column = stop(i) - start(i)
 
   /** Collect the covering span of `df`'s interval column to the driver
@@ -181,8 +188,8 @@ object IntervalCols {
     * extra eager scan is needed (the reference does an eager missing-scan,
     * `src/DataFrameIntervals.jl:136-141`; at 100 TB an extra scan per join
     * is unacceptable, so we assert inline). */
-  def rejectNull(c: Column, side: String): Column =
-    when(c.isNull || start(c).isNull || stop(c).isNull,
+  def rejectNull(c: Column, side: String, fields: Seq[String] = Seq("start", "stop")): Column =
+    when(fields.map(c.getField(_).isNull).foldLeft(c.isNull)(_ || _),
       raise_error(lit(s"There are missing values in the $side table of `interval_join`.")))
-      .otherwise(normalize(c))
+      .otherwise(normalize(c, fields))
 }

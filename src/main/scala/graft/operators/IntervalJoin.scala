@@ -28,16 +28,14 @@ import graft.intervals.IntervalCols._
   *    interval-binning MapReduce pattern; it turns an O(n·m) nested loop into
   *    a sort-merge join that partitions across a cluster.
   *  - [[Strategy.Sweep]] — range-partitioned plane sweep ([[SweepJoin]]);
-  *    half-open inner joins only.
+  *    inner joins only.
   *  - [[Strategy.Auto]] — for an inner join, Binned on the windows' own
   *    grid when either `on` column carries a [[QuantileWindows]] grid hint
   *    (outer joins keep the pick below: the binned outer plan's matched-flag
   *    window shuffle made them slower than the broadcast nested loop against
   *    a small window frame); else Range when the
   *    smaller side is small in both bytes and estimated rows
-  *    (`maxRangeRows`), else Sweep for half-open inner joins and Binned
-  *    otherwise; always Range without an integral tick space (floating or
-  *    non-integral bounded endpoints).
+  *    (`maxRangeRows`), else Sweep for inner joins and Binned otherwise.
   *
   * The binned plan's cells come from, in order: an explicit `binWidth`
   * (cells `x div binWidth`); the grid hint `{lo, hi, n}` that
@@ -52,15 +50,17 @@ import graft.intervals.IntervalCols._
   * matches it (filtered, relabelled, unioned with a shifted grid) still
   * joins exactly, only slower (see `binPlan`).
   *
-  * ## One pipeline for every interval form
+  * ## One tick space for every interval form
   *
-  * Half-open intervals (integral, floating or timestamp endpoints) and
-  * bounded `struct<start,stop,lclosed,rclosed>` intervals run through the
-  * same steps: validate, project to positional temp columns, pick a
-  * strategy, join, select the output; they share one binned plan. The form
-  * (`Form`) decides only the `on` projection and NULL guard, the overlap
-  * predicate, each side's bin array, the intersection and `backto`
-  * expressions, and which strategies it rejects.
+  * Every form — half-open intervals with integral, floating or timestamp
+  * endpoints, and bounded `struct<start,stop,lclosed,rclosed>` intervals —
+  * projects its `on` column to a half-open `struct<start:long, stop:long>`
+  * of order-preserving ticks (`IntervalCols.tickOf`), and every strategy
+  * joins on those ticks. The form (`Form`) decides only the projection, the
+  * ticks, the output and, for bounded intervals, the exact overlap: Range
+  * joins on it alone, and it filters the scale paths' tick candidates.
+  * Endpoint types with no 64-bit order-preserving key (strings, decimals
+  * wider than 18 digits) join on Range only.
   *
   * ## Semantics carried over from the reference (SURVEY §2.1)
   *
@@ -209,17 +209,27 @@ object IntervalJoin {
 
     // Rename ALL columns to positional temp names before the join — kills
     // self-join ambiguity and duplicate-name issues in one move; the final
-    // select restores the reference's naming contract.
+    // select restores the reference's naming contract. The `on` column
+    // becomes its tick pair; a value its ticks do not invert rides beside
+    // it as `__lv` / `__rv`.
     val lTmp = left.columns.indices.map(i => s"__l$i")
     val rTmp = right.columns.indices.map(i => s"__r$i")
     val lOnT = s"__l${left.columns.indexOf(lOnName)}"
     val rOnT = s"__r${right.columns.indexOf(rOnName)}"
-    def project(df: DataFrame, tmp: Seq[String], onT: String, isLeft: Boolean) =
-      df.select(df.columns.zip(tmp).map { case (c, t) =>
+    def project(df: DataFrame, tmp: Seq[String], onT: String, valueT: String, isLeft: Boolean) = {
+      val projected = df.select(df.columns.zip(tmp).map { case (c, t) =>
         (if (t == onT) form.project(col(c), isLeft) else col(c)).as(t)
       }: _*)
-    val l2 = project(left, lTmp, lOnT, isLeft = true)
-    val r2 = project(right, rTmp, rOnT, isLeft = false)
+      form.ticks.fold(projected)(ticks =>
+        projected.withColumn(valueT, col(onT)).withColumn(onT, ticks(col(onT), isLeft)))
+    }
+    val l2 = project(left, lTmp, lOnT, "__lv", isLeft = true)
+    val r2 = project(right, rTmp, rOnT, "__rv", isLeft = false)
+    val (lV, rV) =
+      if (form.ticks.isDefined) (col("__lv"), col("__rv")) else (col(lOnT), col(rOnT))
+    // a residual alone is exact; its ticks only narrow the scale paths
+    val residual = form.residual(lV, rV)
+    val overlap = residual.getOrElse(overlaps(col(lOnT), col(rOnT)))
 
     val joinType = (opts.keepleft, opts.keepright) match {
       case (false, false) => "inner"
@@ -228,18 +238,28 @@ object IntervalJoin {
       case (true, true)   => "full_outer"
     }
 
+    // endpoint types with no order-preserving long tick (strings, wide
+    // decimals) share the one tick [0, 1): only the residual tells rows
+    // apart, so a scale strategy would compare every pair in one task
+    val endpoint = left.schema(lOnName).dataType.asInstanceOf[StructType]("start").dataType
+    val keyed = tickOf(endpoint).isDefined
     // quantileWindows' grid on either side: an inner join bins on it — no
     // stats pass, and no nested loop of every span against every window
     val grid = QuantileWindows.gridOf(left, lOnName)
       .orElse(QuantileWindows.gridOf(right, rOnName)).flatMap(gridCell)
     val strategy = opts.strategy match {
-      case Strategy.Auto if joinType == "inner" && form.binnable && grid.isDefined =>
-        Strategy.Binned
-      case Strategy.Auto if !form.binnable || rangeJoinViable(l2, r2, opts) => Strategy.Range
+      case Strategy.Binned | Strategy.Sweep if !keyed => throw new IllegalArgumentException(
+        s"the ${opts.strategy} strategy joins on order-preserving long ticks, and " +
+          s"${endpoint.simpleString} interval endpoints have none; they join " +
+          "on Strategy.Range — cast the endpoints to an integral, date, timestamp, floating " +
+          "or decimal(18) type to use the scale paths.")
+      case Strategy.Auto if !keyed => Strategy.Range
+      case Strategy.Auto if joinType == "inner" && grid.isDefined => Strategy.Binned
+      case Strategy.Auto if rangeJoinViable(l2, r2, opts) => Strategy.Range
       // big-big: the per-partition sweep beats the binned equi-join on
       // inner joins (measured 1.4x at 29 M pairs, 2.8x at 500 M — and the
       // gap WIDENS with scale); outer variants run on the binned path
-      case Strategy.Auto if joinType == "inner" && form.sweepable => Strategy.Sweep
+      case Strategy.Auto if joinType == "inner" => Strategy.Sweep
       case Strategy.Auto => Strategy.Binned
       case s => s
     }
@@ -248,54 +268,52 @@ object IntervalJoin {
       .orElse(statsCell(l2, r2, lOnT, rOnT))
     val joined = strategy match {
       case Strategy.Sweep if joinType == "inner" =>
-        SweepJoin.sweepInner(l2, r2, lOnT, rOnT, opts)
+        val swept = SweepJoin.sweepInner(l2, r2, lOnT, rOnT, opts)
+        residual.fold(swept)(swept.where)
       case Strategy.Binned if joinType == "inner" =>
-        binnedInner(l2, r2, lOnT, rOnT, form, cell)
+        binnedInner(l2, r2, lOnT, rOnT, overlap, residual, cell)
       case Strategy.Binned | Strategy.Sweep =>
-        binnedOuter(l2, r2, lOnT, rOnT, form, joinType, opts, cell)
+        binnedOuter(l2, r2, lOnT, rOnT, overlap, residual, joinType, opts, cell)
       case _ =>
         // Theta join; Catalyst broadcasts the small side (BNLJ) — right for
         // a small frame without a grid hint.
-        l2.join(r2, form.overlap(col(lOnT), col(rOnT)), joinType)
+        l2.join(r2, overlap, joinType)
     }
 
     // Output intersection column keeps the LEFT frame's `on` name (ref :76).
     val outCols = (lTmp ++ rTmp).zip(finalNames).map { case (t, f) =>
-      (if (t == lOnT) form.backto(col(t), isLeft = true)
-       else if (t == rOnT) form.backto(col(t), isLeft = false)
+      (if (t == lOnT) form.backto(lV, isLeft = true)
+       else if (t == rOnT) form.backto(rV, isLeft = false)
        else col(t)).as(f)
-    } :+ form.intersect(col(lOnT), col(rOnT)).as(lOnName)
+    } :+ form.intersect(lV, rV).as(lOnName)
     joined.select(outCols: _*)
   }
 
-  /** What the interval form decides in the one join pipeline; validation of
-    * the form's own inputs happens when it is built. Columns passed in are
-    * the projected temp `on` columns, except for `project`'s input. */
+  /** What an interval form decides in the one join pipeline; the form
+    * validates its own inputs when it is built. */
   private trait Form {
-    /** The form has an exact integral tick space, which the binned path needs. */
-    def binnable: Boolean
-    def sweepable: Boolean
-    /** Input `on` column → its internal join representation, NULL-guarded. */
+    /** Input `on` column → its validated value, NULL for a NULL interval. */
     def project(c: Column, isLeft: Boolean): Column
-    /** The Range join condition. */
-    def overlap(l: Column, r: Column): Column
-    /** The binned join's residual: only non-empty intervals receive bins. */
-    def binnedOverlap(l: Column, r: Column): Column = overlap(l, r)
-    /** The side's bins run to an INCLUSIVE stop (a closed stop can still
-      * touch-match inside its own bin), and a closed-closed point gets its
-      * one bin; otherwise the stop bin is exclusive. */
-    def closedBins(isLeft: Boolean): Boolean
-    /** Output form of a side's `on` column (the reference's `backto`). */
-    def backto(c: Column, isLeft: Boolean): Column
+    /** Projected value → its half-open `struct<start:long, stop:long>` tick
+      * pair. None when the value already is that pair (integral and
+      * timestamp half-open intervals); otherwise the value rides beside its
+      * ticks, and `backto`, `intersect` and `residual` read it. */
+    def ticks: Option[(Column, Boolean) => Column]
+    /** The exact overlap of two riding values that the ticks only cover. */
+    def residual(l: Column, r: Column): Option[Column] = None
+    /** Output form of a side's value (the reference's `backto`). */
+    def backto(v: Column, isLeft: Boolean): Column
     /** The appended intersection column, NULL for null-extended rows. */
     def intersect(l: Column, r: Column): Column
   }
 
-  /** Half-open intervals. Timestamp-struct intervals are supported
-    * natively: converted to exact long-µs ticks for the join, converted back
+  /** Half-open intervals. Integral endpoints widen to long ticks and
+    * timestamp-struct intervals become exact long-µs ticks; both convert back
     * on output (the reference's `backto` contract — results keep the input
-    * representation). Mixed long/timestamp sides are ambiguous (whose unit
-    * is the long?) → error. */
+    * representation). Floating endpoints (reference generic ordered `T`,
+    * src/DataFrameIntervals.jl:31) widen to double values that ride beside
+    * their IEEE sortable-key ticks, which keep SQL order exactly. Mixed
+    * long/timestamp sides are ambiguous (whose unit is the long?) → error. */
   private def halfOpenForm(left: DataFrame, right: DataFrame, on: (String, String),
       opts: Options): Form = {
     val (lOnName, rOnName) = on
@@ -309,88 +327,61 @@ object IntervalJoin {
           "(IntervalCols.microsFromTimestampStruct / timestampStructFromMicros).")
     val ts = lTsType.isDefined
     val ntz = lTsType.contains(TimestampNTZType)
-    // non-timestamp endpoints: integral types widen to long ticks internally
-    // and are restored on output (`backto`); floating endpoints (reference
-    // generic ordered `T`, src/DataFrameIntervals.jl:31) widen to double and
-    // are range-join-only — floats have no exact tick space for the
-    // binned/sweep integer math
-    val (lIntType, rIntType) =
-      if (ts) (None, None)
-      else (Some(endpointType(left, lOnName, "left")),
-        Some(endpointType(right, rOnName, "right")))
-    val isFloat = lIntType.exists(isFloating) || rIntType.exists(isFloating)
-    if (isFloat && !(lIntType ++ rIntType).forall(isFloating))
+    val types = lTsType.fold(Seq(endpointType(left, lOnName, "left"),
+      endpointType(right, rOnName, "right")))(t => Seq(t, t))
+    val isFloat = types.exists(isFloating)
+    if (isFloat && !types.forall(isFloating))
       throw new IllegalArgumentException(
         "interval_join cannot mix floating and integral interval endpoints across sides " +
-          s"(left `$lOnName` is ${lIntType.get.simpleString}, right `$rOnName` is " +
-          s"${rIntType.get.simpleString}); cast one side explicitly.")
-    if (isFloat && (opts.strategy == Strategy.Binned || opts.strategy == Strategy.Sweep))
-      throw new IllegalArgumentException(
-        s"the ${opts.strategy} strategy requires integral or timestamp interval endpoints " +
-          "(exact tick space); floating endpoints run on Strategy.Range — quantize the " +
-          "endpoints to integer ticks to use the binned/sweep scale paths.")
-    // the intersection mixes both sides' values -> the wider integral type
-    val isectType = for (a <- lIntType; b <- rIntType)
-      yield if (a.defaultSize >= b.defaultSize) a else b
-    def back(c: Column, intType: Option[DataType]): Column =
+          s"(left `$lOnName` is ${types(0).simpleString}, right `$rOnName` is " +
+          s"${types(1).simpleString}); cast one side explicitly.")
+    val wide = if (isFloat) DoubleType else LongType
+    def side(isLeft: Boolean) = types(if (isLeft) 0 else 1)
+    def back(c: Column, dt: DataType): Column =
       if (ts) timestampStructFromMicros(c, ntz)
-      else intType match {
-        case Some(dt) if dt != LongType =>
-          when(c.isNull, lit(null)).otherwise(
-            struct(c.getField("start").cast(dt).as("start"),
-              c.getField("stop").cast(dt).as("stop")))
-        case _ => c
-      }
+      else if (dt != wide)
+        when(c.isNull, lit(null)).otherwise(
+          struct(c.getField("start").cast(dt).as("start"), c.getField("stop").cast(dt).as("stop")))
+      else c
     new Form {
-      val binnable = !isFloat
-      val sweepable = true
       def project(c: Column, isLeft: Boolean) = {
-        val norm =
-          if (opts.checkMissing) rejectNull(c, if (isLeft) "left" else "right")
-          else normalize(c)
-        val internal = internalTypeOf(if (isLeft) lIntType else rIntType)
+        val norm = validated(c, isLeft, opts, Seq("start", "stop"))
         if (ts) microsFromTimestampStruct(norm, ntz)
-        else if (internal.isDefined)
+        else if (side(isLeft) != wide)
           when(norm.isNull, lit(null)).otherwise(
-            interval(norm.getField("start").cast(internal.get),
-              norm.getField("stop").cast(internal.get)))
+            interval(norm.getField("start").cast(wide), norm.getField("stop").cast(wide)))
         else norm
       }
-      def overlap(l: Column, r: Column) = overlaps(l, r)
-      // Raw overlap predicate (no degenerate-interval conjuncts): only rows
-      // with start < stop receive bins at all, so the extra checks that
-      // `overlaps` needs on the Range path are already guaranteed here —
-      // two fewer comparisons per candidate pair in the hot loop.
-      override def binnedOverlap(l: Column, r: Column) =
-        start(l) < stop(r) && start(r) < stop(l)
-      def closedBins(isLeft: Boolean) = false
-      def backto(c: Column, isLeft: Boolean) = back(c, if (isLeft) lIntType else rIntType)
-      def intersect(l: Column, r: Column) = back(intersection(l, r), isectType)
+      val ticks =
+        if (isFloat) Some((v: Column, _: Boolean) => ticksOf(v, DoubleType)) else None
+      def backto(c: Column, isLeft: Boolean) = back(c, side(isLeft))
+      // the intersection mixes both sides' values -> the wider type
+      def intersect(l: Column, r: Column) = back(intersection(l, r), types.maxBy(_.defaultSize))
     }
   }
 
   /** Bounded intervals (struct<start,stop,lclosed,rclosed> — the
     * reference's generic `Interval{T,L,R}`, src/DataFrameIntervals.jl:31-35,
     * closed-closed example README.md:29) on at least one side; a plain
-    * half-open side is lifted to Closed-Open. No tick conversion — the
-    * predicates are pure comparisons, so any atomic orderable endpoint type
-    * works on the Range path (ints, floats, timestamps, dates...), it only
-    * has to agree across all four endpoints; the binned path needs integral
-    * endpoints. The joined output column follows the reference's
-    * `backto`-to-left contract: bounded (with merged flags) when the LEFT
-    * side is bounded, plain start/stop when the left side is a half-open
-    * struct joined against a bounded right. */
+    * half-open side is lifted to Closed-Open. Any atomic orderable endpoint
+    * type works, as long as all four endpoints share it. Overlap is
+    * continuous, as in the reference: open `(1, 3)` and `(2, 5)` share the
+    * gap `(2, 3)`. One long tick per 64-bit key leaves no room for the gaps,
+    * so the ticks only cover: `[key(start), key(stop))`, one tick longer at
+    * a closed stop, with the exact overlap as the residual. A closed stop at
+    * `Long.MaxValue` ends its ticks there and starts them at most at
+    * `Long.MaxValue - 1`, so the point `[Long.MaxValue, Long.MaxValue]`
+    * still meets every interval holding it. The output follows the
+    * reference's `backto`-to-left contract: bounded (with merged flags) when
+    * the LEFT side is bounded, plain start/stop otherwise. */
   private def boundedForm(left: DataFrame, right: DataFrame, on: (String, String),
       opts: Options): Form = {
     val (lOnName, rOnName) = on
     val lB = isBounded(left, lOnName)
     val rB = isBounded(right, rOnName)
-    def epTypes(df: DataFrame, name: String) = {
-      val s = df.schema(name).dataType.asInstanceOf[StructType]
-      (s("start").dataType, s("stop").dataType)
+    val Seq(ls, le, rs, re) = Seq(left -> lOnName, right -> rOnName).flatMap { case (df, n) =>
+      Seq("start", "stop").map(df.schema(n).dataType.asInstanceOf[StructType](_).dataType)
     }
-    val (ls, le) = epTypes(left, lOnName)
-    val (rs, re) = epTypes(right, rOnName)
     if (!(ls == le && rs == re && ls == rs))
       throw new IllegalArgumentException(
         "bounded interval join requires ONE endpoint type across all four endpoints; got " +
@@ -403,20 +394,7 @@ object IntervalJoin {
         throw new IllegalArgumentException(
           s"bounded interval column `$name`: ${bad.mkString(", ")} must be boolean")
     }
-    val integral = Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(ls)
-    def rejectStrategy(reason: String): Nothing = throw new IllegalArgumentException(
-      s"the ${opts.strategy} strategy cannot run this bounded interval join ($reason); " +
-        "bounded joins run on Strategy.Range, or Strategy.Binned with integral endpoints.")
-    opts.strategy match {
-      case Strategy.Sweep => rejectStrategy("the sweep assumes half-open tick intervals")
-      case Strategy.Binned if !integral => rejectStrategy("no integral tick space to bin")
-      case _ =>
-    }
-    def reorder(c: Column, bounded: Boolean): Column =
-      if (bounded)
-        BoundedIntervals.bounded(c.getField("start"), c.getField("stop"),
-          c.getField("lclosed"), c.getField("rclosed"))
-      else normalize(c)
+    val tick = tickOf(ls)
     // NULL-preserving lift: a bare fromHalfOpen would wrap an outer join's
     // unmatched-side NULL as struct(NULL,NULL,true,false) — non-NULL, so it
     // would slip past intersectBounded's NULL guard and greatest/least would
@@ -426,30 +404,36 @@ object IntervalJoin {
       if (bounded) c
       else when(c.isNull, lit(null)).otherwise(BoundedIntervals.fromHalfOpen(c))
     new Form {
-      val binnable = integral
-      val sweepable = false
-      def project(c: Column, isLeft: Boolean) = {
-        val bounded = if (isLeft) lB else rB
-        if (!opts.checkMissing) reorder(c, bounded)
-        else when(c.isNull || c.getField("start").isNull || c.getField("stop").isNull ||
-            (if (bounded) c.getField("lclosed").isNull || c.getField("rclosed").isNull
-             else lit(false)),
-          raise_error(lit(s"There are missing values in the ${if (isLeft) "left" else "right"} " +
-            "table of `interval_join`.")))
-          .otherwise(reorder(c, bounded))
+      def project(c: Column, isLeft: Boolean) = validated(c, isLeft, opts,
+        Seq("start", "stop") ++ (if (if (isLeft) lB else rB) Seq("lclosed", "rclosed") else Nil))
+      val ticks = Some { (v: Column, isLeft: Boolean) =>
+        when(v.isNull, lit(null)).otherwise(tick.fold(interval(lit(0L), lit(1L))) { key =>
+          val (s, e) = (key(v.getField("start")), key(v.getField("stop")))
+          if (!(if (isLeft) lB else rB)) interval(s, e)
+          else {
+            val rc = v.getField("rclosed")
+            val top = rc && e === lit(Long.MaxValue)
+            interval(when(top, least(s, lit(Long.MaxValue - 1))).otherwise(s),
+              when(rc && !top, e + 1L).otherwise(e))
+          }
+        })
       }
-      def overlap(l: Column, r: Column) =
-        BoundedIntervals.overlapsBounded(lifted(l, lB), lifted(r, rB))
-      def closedBins(isLeft: Boolean) = if (isLeft) lB else rB
+      override def residual(l: Column, r: Column) =
+        Some(BoundedIntervals.overlapsBounded(lifted(l, lB), lifted(r, rB)))
       def backto(c: Column, isLeft: Boolean) = c
       def intersect(l: Column, r: Column) = {
         val isect = BoundedIntervals.intersectBounded(lifted(l, lB), lifted(r, rB))
-        if (lB) isect
-        else when(isect.isNull, lit(null)).otherwise(
-          interval(isect.getField("start"), isect.getField("stop")))
+        if (lB) isect else when(isect.isNull, lit(null)).otherwise(normalize(isect))
       }
     }
   }
+
+  /** A side's `on` column reduced to `fields`, in that order, NULL for a
+    * NULL interval; with `checkMissing`, a NULL interval or field fails the
+    * job with the reference's message instead. */
+  private def validated(c: Column, isLeft: Boolean, opts: Options, fields: Seq[String]): Column =
+    if (opts.checkMissing) rejectNull(c, if (isLeft) "left" else "right", fields)
+    else when(c.isNull, lit(null)).otherwise(normalize(c, fields))
 
   /** Bin-width floors of the binned plan: no interval explodes to more than
     * `MaxBinsPerRow` bins, and the total bin count stays within `TargetBins`
@@ -530,43 +514,38 @@ object IntervalJoin {
     * with a NULL bin so outer variants can keep them) and stamps each side's
     * own first bin (`__lbin0`/`__rbin0`) for null-extension dedup. */
   private def binPlan(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      form: Form, cell: Cell, outer: Boolean): (DataFrame, DataFrame, Column) = {
-    // The cast widens narrower bounded endpoints; on long ticks the
-    // optimizer removes it.
-    def binOf(xSql: String) = cell(s"(cast(($xSql) as bigint))")
+      residual: Option[Column], cell: Cell, outer: Boolean): (DataFrame, DataFrame, Column) = {
+    def binOf(xSql: String) = cell(s"($xSql)")
     // Empty intervals overlap nothing: give them an empty bin array instead
     // of letting `sequence` count DOWN and explode one corrupt row into up
-    // to TargetBins rows. Non-empty per BoundedIntervals.nonEmpty on a
-    // closed-bin side ([a,a] closed-closed is a point).
-    def binsOf(onT: String, closed: Boolean) = expr(
-      if (closed)
-        s"case when ($onT.start) < ($onT.stop) " +
-          s"or (($onT.start) = ($onT.stop) and ($onT.lclosed) and ($onT.rclosed)) " +
-          s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop")}) " +
-          "else cast(array() as array<bigint>) end"
-      else
-        s"case when ($onT.start) < ($onT.stop) " +
-          s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop - 1")}) " +
-          "else cast(array() as array<bigint>) end")
-    def withBins(df: DataFrame, onT: String, closed: Boolean, binCol: String, bin0: String) = {
+    // to TargetBins rows.
+    def binsOf(onT: String) = expr(
+      s"case when ($onT.start) < ($onT.stop) " +
+        s"then sequence(${binOf(s"$onT.start")}, ${binOf(s"$onT.stop - 1")}) " +
+        "else cast(array() as array<bigint>) end")
+    def withBins(df: DataFrame, onT: String, binCol: String, bin0: String) = {
       val exploded = df.withColumn(binCol,
-        if (outer) explode_outer(binsOf(onT, closed)) else explode(binsOf(onT, closed)))
+        if (outer) explode_outer(binsOf(onT)) else explode(binsOf(onT)))
       if (outer) exploded.withColumn(bin0, expr(binOf(s"$onT.start"))) else exploded
     }
-    val lB = withBins(l2, lOnT, form.closedBins(isLeft = true), "__lbin", "__lbin0")
-    val rB = withBins(r2, rOnT, form.closedBins(isLeft = false), "__rbin", "__rbin0")
+    val lB = withBins(l2, lOnT, "__lbin", "__lbin0")
+    val rB = withBins(r2, rOnT, "__rbin", "__rbin0")
+    // Raw tick overlap (no degenerate-interval conjuncts): only rows with
+    // start < stop receive bins at all, so the extra checks that `overlaps`
+    // needs on the Range path are already guaranteed here.
+    val ticks = start(col(lOnT)) < stop(col(rOnT)) && start(col(rOnT)) < stop(col(lOnT))
     // Keep each matching pair only in the bin holding greatest(l.start,
     // r.start): dedup folded into the join residual, no `distinct` shuffle.
-    val cond = col("__lbin") === col("__rbin") && form.binnedOverlap(col(lOnT), col(rOnT)) &&
+    val cond = col("__lbin") === col("__rbin") && residual.fold(ticks)(ticks && _) &&
       col("__lbin") === expr(binOf(s"greatest($lOnT.start, $rOnT.start)"))
     (lB, rB, cond)
   }
 
   /** Binned equi-join on overlapping fixed-width time buckets. See scaladoc. */
   private def binnedInner(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      form: Form, cell: Option[Cell]): DataFrame =
-    cell.map(binPlan(l2, r2, lOnT, rOnT, form, _, outer = false)) match {
-      case None             => l2.join(r2, form.overlap(col(lOnT), col(rOnT)), "inner")
+      overlap: Column, residual: Option[Column], cell: Option[Cell]): DataFrame =
+    cell.map(binPlan(l2, r2, lOnT, rOnT, residual, _, outer = false)) match {
+      case None             => l2.join(r2, overlap, "inner")
       case Some((lB, rB, c)) => lB.join(rB, c, "inner").drop("__lbin", "__rbin")
     }
 
@@ -586,12 +565,13 @@ object IntervalJoin {
     * All shuffles are equi-partitioned (bins, then 8-byte ids) — no nested
     * loop anywhere. */
   private def binnedOuter(l2: DataFrame, r2: DataFrame, lOnT: String, rOnT: String,
-      form: Form, joinType: String, opts: Options, cell: Option[Cell]): DataFrame = {
+      overlap: Column, residual: Option[Column], joinType: String, opts: Options,
+      cell: Option[Cell]): DataFrame = {
     val lId = l2.withColumn("__lid", monotonically_increasing_id())
     val rId = r2.withColumn("__rid", monotonically_increasing_id())
-    cell.map(binPlan(lId, rId, lOnT, rOnT, form, _, outer = true)) match {
+    cell.map(binPlan(lId, rId, lOnT, rOnT, residual, _, outer = true)) match {
       case None =>
-        l2.join(r2, form.overlap(col(lOnT), col(rOnT)), joinType)
+        l2.join(r2, overlap, joinType)
       case Some((lB, rB, cond)) =>
         var flagged = lB.join(rB, cond, joinType)
         if (opts.keepleft)
@@ -654,14 +634,9 @@ object IntervalJoin {
     val joinedOn = lOnName
     val lOnFinal = opts.renameon._1(lOnName)
     val rOnFinal = opts.renameon._2(rOnName)
-    if (lOnFinal == joinedOn)
+    for ((side, onFinal) <- Seq("left" -> lOnFinal, "right" -> rOnFinal) if onFinal == joinedOn)
       throw new IllegalArgumentException(
-        s"Interval join failed: left dataframe's `on` column has the final name `$lOnFinal` " +
-          s"which clashes with the name of the joined output column `$joinedOn`; " +
-          "pass a different `renameon`.")
-    if (rOnFinal == joinedOn)
-      throw new IllegalArgumentException(
-        s"Interval join failed: right dataframe's `on` column has the final name `$rOnFinal` " +
+        s"Interval join failed: $side dataframe's `on` column has the final name `$onFinal` " +
           s"which clashes with the name of the joined output column `$joinedOn`; " +
           "pass a different `renameon`.")
     val lFinal = left.columns.map(c => if (c == lOnName) lOnFinal else opts.renamecols._1(c))
@@ -696,12 +671,11 @@ object IntervalJoin {
           s"got ${other.simpleString}")
     }
 
-  /** Endpoint type of a non-timestamp interval column: integral types are
-    * accepted on every strategy (narrower ones widen to long ticks
-    * internally and come back in their own type — `backto`); floating types
-    * are accepted on the Range strategy only (widened to double internally);
-    * anything else is rejected up front rather than failing inside a stats
-    * pass. */
+  /** Endpoint type of a non-timestamp half-open interval column: integral
+    * types (long ticks, restored to their own type on output — `backto`) and
+    * floating types (double values beside their sortable-key ticks) run on
+    * every strategy; anything else is rejected up front rather than failing
+    * inside a stats pass. */
   private def endpointType(df: DataFrame, name: String, side: String): DataType = {
     val s = df.schema(name).dataType.asInstanceOf[StructType]
     val ts = Seq("start", "stop").map(f => s(f).dataType)
@@ -716,16 +690,6 @@ object IntervalJoin {
   }
 
   private def isFloating(dt: DataType): Boolean = dt == FloatType || dt == DoubleType
-
-  /** Internal join representation for a declared endpoint type: long ticks
-    * for integral endpoints, double for floating ones; None = no conversion
-    * needed. */
-  private def internalTypeOf(declared: Option[DataType]): Option[DataType] =
-    declared match {
-      case Some(dt) if isFloating(dt) && dt != DoubleType => Some(DoubleType)
-      case Some(dt) if !isFloating(dt) && dt != LongType  => Some(LongType)
-      case _ => None
-    }
 
   /** DataFrames.jl-style `makeunique`: duplicate names get `_1`, `_2`, ...
     * suffixes; without the flag duplicates are an error

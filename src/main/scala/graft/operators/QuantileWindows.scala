@@ -84,30 +84,27 @@ object QuantileWindows {
       df: DataFrame,
       spancol: String,
       label: String,
-      minDuration: Option[Long]): DataFrame =
-    if (IntervalCols.isTimestampInterval(df, spancol)) {
-      // timestamp-struct span: window in exact long-µs ticks, convert the
-      // output back to timestamps (the reference's `backto` contract —
-      // NTZ spans come back as NTZ, TZ spans as TZ)
-      val ntz = IntervalCols.timestampEndpointType(df, spancol)
-        .contains(org.apache.spark.sql.types.TimestampNTZType)
-      val ticks = df.select(
-        IntervalCols.microsFromTimestampStruct(col(spancol), ntz).as(spancol))
-      val wins = IntervalCols.coveringSpan(ticks, spancol) match {
-        case Some((lo, hi)) =>
-          quantileWindows(df.sparkSession, n, lo, hi, spancol, label, minDuration)
-        case None =>
-          quantileWindows(df.sparkSession, n, 0L, 0L, spancol, label).limit(0)
-      }
-      // the grid hint stays in µs ticks, the join's internal tick space
-      wins.select(col(label), IntervalCols.timestampStructFromMicros(col(spancol), ntz)
-        .as(spancol, wins.schema(spancol).metadata))
-    } else IntervalCols.coveringSpan(df, spancol) match {
+      minDuration: Option[Long]): DataFrame = {
+    def windows(ticks: DataFrame) = IntervalCols.coveringSpan(ticks, spancol) match {
       case Some((lo, hi)) =>
         quantileWindows(df.sparkSession, n, lo, hi, spancol, label, minDuration)
       case None =>
         quantileWindows(df.sparkSession, n, 0L, 0L, spancol, label).limit(0)
     }
+    IntervalCols.timestampEndpointType(df, spancol) match {
+      case Some(tsType) =>
+        // timestamp-struct span: window in exact long-µs ticks, convert the
+        // output back to timestamps (the reference's `backto` contract —
+        // NTZ spans come back as NTZ, TZ spans as TZ)
+        val ntz = tsType == org.apache.spark.sql.types.TimestampNTZType
+        val wins = windows(df.select(
+          IntervalCols.microsFromTimestampStruct(col(spancol), ntz).as(spancol)))
+        // the grid hint stays in µs ticks, the join's internal tick space
+        wins.select(col(label), IntervalCols.timestampStructFromMicros(col(spancol), ntz)
+          .as(spancol, wins.schema(spancol).metadata))
+      case None => windows(df)
+    }
+  }
 
   def quantileWindows(n: Long, df: DataFrame, spancol: String): DataFrame =
     quantileWindows(n, df, spancol, "index")

@@ -161,9 +161,10 @@ object SweepJoin {
     val threshold = opts.sweepLongThreshold
       .getOrElse(autoLongThreshold(sample, bounds))
 
+    // lengths in decimal(20,0): a long `sp - st` overflows past Long.MaxValue
     def isLong(onT: String): Column = {
-      val st = col(s"$onT.start"); val sp = col(s"$onT.stop")
-      st.isNotNull && sp.isNotNull && st < sp && (sp - st) > threshold
+      val st = col(s"$onT.start"); val sp = col(s"$onT.stop").cast("decimal(20,0)")
+      st.isNotNull && sp.isNotNull && st < sp && (sp - st.cast("decimal(20,0)")) > threshold
     }
     def notLong(onT: String): Column = !coalesce(isLong(onT), lit(false))
 

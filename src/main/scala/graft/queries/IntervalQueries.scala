@@ -452,8 +452,8 @@ private[graft] object IntervalQueries {
         |FROM j WHERE rn = 1""".stripMargin),
 
     // I1 generalized: BOUNDED intervals (per-row Closed/Open flags — the
-    // reference's generic Interval{T,L,R}) on the range path. Day-tick
-    // endpoints; left bounds vary by key parity, right by key mod 3, so
+    // reference's generic Interval{T,L,R}), broadcast against the tiny
+    // nation frame. Day-tick endpoints; left bounds vary by key parity, right by key mod 3, so
     // the bound-sensitive touching cases and the merged intersection flags
     // are all exercised against DuckDB's explicit >=/<= algebra.
     QueryDef("q52_interval_join_bounded", (sp, dir) => {
@@ -496,8 +496,8 @@ private[graft] object IntervalQueries {
         | AND NOT (e < ws OR (e = ws AND NOT (rc AND wlc)))
         | AND NOT (we < s OR (we = s AND NOT (wrc AND lc)))""".stripMargin),
 
-    // I1 generalized: FLOATING endpoints (reference generic ordered T) on
-    // the range path — no tick space needed; greatest/least intersection
+    // I1 generalized: FLOATING endpoints (reference generic ordered T),
+    // broadcast against the tiny region frame; greatest/least intersection
     // endpoints are picked, not computed, so they compare exactly
     QueryDef("q53_interval_join_float", (sp, dir) => {
       val price = col("o_totalprice").cast("double")

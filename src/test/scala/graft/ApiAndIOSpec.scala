@@ -11,6 +11,13 @@ class ApiAndIOSpec extends SparkSuite {
 
   lazy val df = fixture()
 
+  /** A fresh temp directory for `body`, removed with its contents after. */
+  private def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("façade: quantileWindows + implicit intervalJoin syntax") {
     val quarters = quantileWindows(4, df, spancol = "span", label = "quarter")
     val j = df.intervalJoin(quarters, "span")
@@ -26,104 +33,113 @@ class ApiAndIOSpec extends SparkSuite {
   }
 
   test("parquet roundtrip preserves interval structs and join results") {
-    val dir = Files.createTempDirectory("graft_io").toString
-    df.write.mode("overwrite").parquet(s"$dir/spans")
-    val back = spark.read.parquet(s"$dir/spans")
-    // parquet reads all fields nullable; compare names/types only
-    assert(back.schema("span").dataType.simpleString == df.schema("span").dataType.simpleString)
-    val quarters = quantileWindows(4, df, "span", "quarter")
-    assertSameRows(
-      df.intervalJoin(quarters, "span"),
-      back.intervalJoin(quarters, "span"))
+    withTempDir("graft_io") { dir =>
+      df.write.mode("overwrite").parquet(s"$dir/spans")
+      val back = spark.read.parquet(s"$dir/spans")
+      // parquet reads all fields nullable; compare names/types only
+      assert(back.schema("span").dataType.simpleString == df.schema("span").dataType.simpleString)
+      val quarters = quantileWindows(4, df, "span", "quarter")
+      assertSameRows(
+        df.intervalJoin(quarters, "span"),
+        back.intervalJoin(quarters, "span"))
+    }
   }
 
   test("json roundtrip (nested struct as JSON object)") {
-    val dir = Files.createTempDirectory("graft_json").toString
-    df.write.mode("overwrite").json(s"$dir/spans")
-    val back = spark.read.schema(df.schema).json(s"$dir/spans")
-    assert(back.count() == df.count())
-    assert(back.select(min(col("span.start"))).head.getLong(0) ==
-      df.select(min(col("span.start"))).head.getLong(0))
+    withTempDir("graft_json") { dir =>
+      df.write.mode("overwrite").json(s"$dir/spans")
+      val back = spark.read.schema(df.schema).json(s"$dir/spans")
+      assert(back.count() == df.count())
+      assert(back.select(min(col("span.start"))).head.getLong(0) ==
+        df.select(min(col("span.start"))).head.getLong(0))
+    }
   }
 
   test("csv roundtrip via flattened endpoints (csv has no nested types)") {
-    val dir = Files.createTempDirectory("graft_csv").toString
-    df.select(col("label"), col("x"), col("span.start").as("s"), col("span.stop").as("e"))
-      .write.mode("overwrite").option("header", "true").csv(s"$dir/spans")
-    val back = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(s"$dir/spans")
-      .select(col("label"), col("x"),
-        struct(col("s").as("start"), col("e").as("stop")).as("span"))
-    assert(back.count() == df.count())
-    val quarters = quantileWindows(4, df, "span", "quarter")
-    assert(back.intervalJoin(quarters, "span").count() ==
-      df.intervalJoin(quarters, "span").count())
+    withTempDir("graft_csv") { dir =>
+      df.select(col("label"), col("x"), col("span.start").as("s"), col("span.stop").as("e"))
+        .write.mode("overwrite").option("header", "true").csv(s"$dir/spans")
+      val back = spark.read.option("header", "true").option("inferSchema", "true")
+        .csv(s"$dir/spans")
+        .select(col("label"), col("x"),
+          struct(col("s").as("start"), col("e").as("stop")).as("span"))
+      assert(back.count() == df.count())
+      val quarters = quantileWindows(4, df, "span", "quarter")
+      assert(back.intervalJoin(quarters, "span").count() ==
+        df.intervalJoin(quarters, "span").count())
+    }
   }
 
   test("interval layout sink: bucket partition pruning is lossless and actually prunes") {
     import graft.sources.IntervalLayout
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val dir = Files.createTempDirectory("graft_layout").toString + "/spans"
-    val binWidth = 20000000000L // 20 s buckets over the ~600 s fixture
-    IntervalLayout.write(df, dir, "span", binWidth)
-    val (w, maxLen) = IntervalLayout.readMeta(spark, dir)
-    assert(w == binWidth)
-    assert(maxLen == df.select(max(expr("span.stop - span.start"))).head().getLong(0))
+    withTempDir("graft_layout") { root =>
+      val dir = s"$root/spans"
+      val binWidth = 20000000000L // 20 s buckets over the ~600 s fixture
+      IntervalLayout.write(df, dir, "span", binWidth)
+      val (w, maxLen) = IntervalLayout.readMeta(spark, dir)
+      assert(w == binWidth)
+      assert(maxLen == df.select(max(expr("span.stop - span.start"))).head().getLong(0))
 
-    // probe a narrow mid-corpus window
-    val Some((lo, hi)) = graft.intervals.IntervalCols.coveringSpan(df, "span")
-    val qlo = lo + (hi - lo) / 2
-    val qhi = qlo + 30000000000L
-    val pruned = IntervalLayout.readOverlapping(spark, dir, "span", qlo, qhi)
-    // lossless: equals the brute-force overlap filter over the raw frame
-    val expected = df.where(graft.intervals.IntervalCols.overlaps(col("span"),
-      graft.intervals.IntervalCols.interval(lit(qlo), lit(qhi))))
-    assertSameRows(pruned.select("label", "x", "span"), expected)
+      // probe a narrow mid-corpus window
+      val Some((lo, hi)) = graft.intervals.IntervalCols.coveringSpan(df, "span")
+      val qlo = lo + (hi - lo) / 2
+      val qhi = qlo + 30000000000L
+      val pruned = IntervalLayout.readOverlapping(spark, dir, "span", qlo, qhi)
+      // lossless: equals the brute-force overlap filter over the raw frame
+      val expected = df.where(graft.intervals.IntervalCols.overlaps(col("span"),
+        graft.intervals.IntervalCols.interval(lit(qlo), lit(qhi))))
+      assertSameRows(pruned.select("label", "x", "span"), expected)
 
-    // and it PRUNES: the scan's partition filters select a strict subset
-    val plan = pruned.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
+      // and it PRUNES: the scan's partition filters select a strict subset
+      val plan = pruned.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val scan = plan.collectFirst { case f: FileSourceScanExec => f }.get
+      assert(scan.partitionFilters.nonEmpty, "bucket predicate must hit the partition index")
+      val selected = scan.relation.location.listFiles(scan.partitionFilters, Nil).length
+      val total = spark.read.parquet(dir).select("__bucket").distinct().count()
+      assert(selected < total, s"selected=$selected of $total buckets — no pruning happened")
+      // widened range really is needed: a long interval starting before qlo
+      // but overlapping it is still found
+      assert(pruned.count() == expected.count())
     }
-    val scan = plan.collectFirst { case f: FileSourceScanExec => f }.get
-    assert(scan.partitionFilters.nonEmpty, "bucket predicate must hit the partition index")
-    val selected = scan.relation.location.listFiles(scan.partitionFilters, Nil).length
-    val total = spark.read.parquet(dir).select("__bucket").distinct().count()
-    assert(selected < total, s"selected=$selected of $total buckets — no pruning happened")
-    // widened range really is needed: a long interval starting before qlo
-    // but overlapping it is still found
-    assert(pruned.count() == expected.count())
   }
 
   test("interval layout: append keeps the widest maxLen; huge ticks bucket exactly") {
     import graft.sources.IntervalLayout
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_layout_app").toString + "/spans"
-    val w = 1000000000L
-    def mk(rows: (Long, Long)*) = rows.toSeq.toDF("s", "e")
-      .select(struct(col("s").as("start"), col("e").as("stop")).as("span"))
-    // batch 1 has a LONG interval; batch 2 is short — the sidecar must keep
-    // the widest bound or batch-1 rows get pruned away later
-    IntervalLayout.write(mk((0L, 50L * w)), dir, "span", w)
-    IntervalLayout.write(mk((100L * w, 100L * w + 10L)), dir, "span", w, mode = "append")
-    assert(IntervalLayout.readMeta(spark, dir) == ((w, 50L * w)))
-    // probing late still finds the early long interval (needs the wide bound)
-    val hit = IntervalLayout.readOverlapping(spark, dir, "span", 49L * w, 49L * w + 10L)
-    assert(hit.count() == 1)
-    // mismatched binWidth on append is rejected
-    val e = intercept[IllegalArgumentException] {
-      IntervalLayout.write(mk((0L, 1L)), dir, "span", w * 2, mode = "append")
+    withTempDir("graft_layout_app") { root =>
+      val dir = s"$root/spans"
+      val w = 1000000000L
+      def mk(rows: (Long, Long)*) = rows.toSeq.toDF("s", "e")
+        .select(struct(col("s").as("start"), col("e").as("stop")).as("span"))
+      // batch 1 has a LONG interval; batch 2 is short — the sidecar must keep
+      // the widest bound or batch-1 rows get pruned away later
+      IntervalLayout.write(mk((0L, 50L * w)), dir, "span", w)
+      IntervalLayout.write(mk((100L * w, 100L * w + 10L)), dir, "span", w, mode = "append")
+      assert(IntervalLayout.readMeta(spark, dir) == ((w, 50L * w)))
+      // probing late still finds the early long interval (needs the wide bound)
+      val hit = IntervalLayout.readOverlapping(spark, dir, "span", 49L * w, 49L * w + 10L)
+      assert(hit.count() == 1)
+      // mismatched binWidth on append is rejected
+      val e = intercept[IllegalArgumentException] {
+        IntervalLayout.write(mk((0L, 1L)), dir, "span", w * 2, mode = "append")
+      }
+      assert(e.getMessage.contains("binWidth"))
+      // bucket arithmetic stays exact past double's 2^53 mantissa: a start
+      // whose quotient would round under double division
+      val big = 4762308809719080237L
+      withTempDir("graft_layout_big") { root2 =>
+        val dir2 = s"$root2/spans"
+        IntervalLayout.write(mk((big, big + 10L)), dir2, "span", w)
+        val bucket = spark.read.parquet(dir2).select(col("__bucket")).head().getLong(0)
+        assert(bucket == Math.floorDiv(big, w), s"got $bucket")
+        assert(IntervalLayout.readOverlapping(spark, dir2, "span", big, big + 5L).count() == 1)
+      }
     }
-    assert(e.getMessage.contains("binWidth"))
-    // bucket arithmetic stays exact past double's 2^53 mantissa: a start
-    // whose quotient would round under double division
-    val big = 4762308809719080237L
-    val dir2 = Files.createTempDirectory("graft_layout_big").toString + "/spans"
-    IntervalLayout.write(mk((big, big + 10L)), dir2, "span", w)
-    val bucket = spark.read.parquet(dir2).select(col("__bucket")).head().getLong(0)
-    assert(bucket == Math.floorDiv(big, w), s"got $bucket")
-    assert(IntervalLayout.readOverlapping(spark, dir2, "span", big, big + 5L).count() == 1)
   }
 
   test("pre-binned bucketed tables: interval join with NO exchange, same pairs as intervalJoin") {
@@ -377,13 +393,14 @@ class ApiAndIOSpec extends SparkSuite {
     // a small single-file parquet scan (with filter/projection on top)
     // under-partitions -> the repair fires; the estimate reads the LOGICAL
     // plan only, so no physical plan exists before the caller runs it
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scans").toString
-    (1 to 1000).toDF("x").coalesce(1).write.mode("overwrite").parquet(tmp)
-    val scan = spark.read.parquet(tmp).where(col("x") > 10).select("x")
-    assert(Scans.estimatedMapParallelism(scan) < 32)
-    val fixed = Scans.withMinParallelism(scan, 32)
-    assert(fixed.rdd.getNumPartitions == 32)
-    assert(fixed.count() == 990)
+    withTempDir("graft_scans") { tmp =>
+      (1 to 1000).toDF("x").coalesce(1).write.mode("overwrite").parquet(tmp)
+      val scan = spark.read.parquet(tmp).where(col("x") > 10).select("x")
+      assert(Scans.estimatedMapParallelism(scan) < 32)
+      val fixed = Scans.withMinParallelism(scan, 32)
+      assert(fixed.rdd.getNumPartitions == 32)
+      assert(fixed.count() == 990)
+    }
   }
 
   test("api pipeline verbs: splitByHash, nearDupPairs, planAudit delegate correctly") {

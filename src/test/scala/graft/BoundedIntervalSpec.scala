@@ -107,21 +107,58 @@ class BoundedIntervalSpec extends SparkSuite {
     assert(un2.isNullAt(un2.fieldIndex("win")), "bounded-left intersection must be NULL")
   }
 
-  test("bounded joins reject sweep/non-integral-binned strategies and mismatched endpoint types") {
+  test("bounded joins give Range's rows on the sweep; mismatched endpoint types are rejected") {
     import graft.operators.IntervalJoin
     import graft.operators.IntervalJoin.{Options, Strategy}
     val l = mk(Seq((1L, 1L, 3L, true, true)), "a")
     val r = mk(Seq((10L, 3L, 5L, true, true)), "b")
-    val e1 = intercept[IllegalArgumentException] {
-      IntervalJoin.intervalJoin(l, r, ("a", "b"), Options(strategy = Strategy.Sweep))
-    }
-    assert(e1.getMessage.contains("Strategy.Range"))
+    def rows(strategy: Strategy) =
+      collectSorted(IntervalJoin.intervalJoin(l, r, ("a", "b"), Options(strategy = strategy)))
+    assert(rows(Strategy.Range).length == 1)
+    assert(rows(Strategy.Sweep) == rows(Strategy.Range))
     val rd = Seq((10L, 3.0, 5.0, true, true)).toDF("b_id", "s", "e", "l", "r")
       .select(col("b_id"), bounded(col("s"), col("e"), col("l"), col("r")).as("b"))
     val e2 = intercept[IllegalArgumentException] {
       IntervalJoin.intervalJoin(l, rd, "a" -> "b")
     }
     assert(e2.getMessage.contains("ONE endpoint type"))
+  }
+
+  test("endpoints without an order-preserving tick key join on Range; forced Binned says why") {
+    import graft.operators.IntervalJoin
+    import graft.operators.IntervalJoin.{Options, Strategy}
+    def strs(rows: Seq[(Long, String, String, Boolean, Boolean)], name: String) =
+      rows.toDF("id", "s", "e", "l", "r").select(col("id").as(s"${name}_id"),
+        bounded(col("s"), col("e"), col("l"), col("r")).as(name))
+    val a = strs(Seq((1L, "a", "c", true, true), (2L, "d", "f", false, true),
+      (3L, "x", "z", true, true)), "a")
+    val b = strs(Seq((10L, "c", "e", true, false)), "b")
+    // [a,c] touches [c,e) on two closed bounds; (d,f] overlaps it on (d,e)
+    val j = IntervalJoin.intervalJoin(a, b, "a" -> "b")
+    assert(j.select("a_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    val e = intercept[IllegalArgumentException] {
+      IntervalJoin.intervalJoin(a, b, ("a", "b"), Options(strategy = Strategy.Binned))
+    }
+    assert(e.getMessage.contains("string interval endpoints have none") &&
+      e.getMessage.contains("Strategy.Range"))
+  }
+
+  test("open gaps between consecutive keys and the closed point at Long.MaxValue join on every strategy") {
+    import graft.operators.IntervalJoin
+    import graft.operators.IntervalJoin.{Options, Strategy}
+    val top = Long.MaxValue
+    // (0,3) and (2,5) open share the gap (2,3); (1,2) open is the gap (1,2)
+    val a = mk(Seq((1L, 0L, 3L, false, false), (2L, 1L, 2L, false, false),
+      (3L, top, top, true, true)), "a")
+    val b = mk(Seq((10L, 2L, 5L, false, false), (11L, 1L, 2L, false, false),
+      (12L, top - 1, top, true, true), (13L, top - 1, top, true, false),
+      (14L, 0L, top, false, true)), "b")
+    val expected = Seq((1L, 10L), (1L, 11L), (1L, 14L), (2L, 11L), (2L, 14L), (3L, 12L), (3L, 14L))
+    for (strategy <- Seq(Strategy.Range, Strategy.Binned, Strategy.Sweep, Strategy.Auto)) {
+      val got = IntervalJoin.intervalJoin(a, b, ("a", "b"), Options(strategy = strategy))
+        .select("a_id", "b_id").as[(Long, Long)].collect().sorted.toSeq
+      assert(got == expected, s"$strategy")
+    }
   }
 
   test("property: bounded BINNED outer joins == range outer joins on random bound combos") {
@@ -204,7 +241,7 @@ class BoundedIntervalSpec extends SparkSuite {
       mixedPairs(Options(strategy = Strategy.Range)))
   }
 
-  test("float endpoints run on the range path; bin/sweep asks error") {
+  test("float endpoints join alike on every strategy; mixed float/integral sides error") {
     import graft.operators.IntervalJoin
     import graft.operators.IntervalJoin.{Options, Strategy}
     import graft.intervals.IntervalCols
@@ -219,10 +256,9 @@ class BoundedIntervalSpec extends SparkSuite {
       row.getStruct(row.fieldIndex("span"))).toMap
     assert(byId(1L).getDouble(0) == 2.0 && byId(1L).getDouble(1) == 2.5)
     assert(byId(2L).getDouble(0) == 3.0 && byId(2L).getDouble(1) == 3.5)
-    val e = intercept[IllegalArgumentException] {
-      IntervalJoin.intervalJoin(l, r, ("span", "win"), Options(strategy = Strategy.Sweep))
-    }
-    assert(e.getMessage.contains("integral or timestamp"))
+    for (strategy <- Seq(Strategy.Binned, Strategy.Sweep))
+      assert(collectSorted(IntervalJoin.intervalJoin(l, r, ("span", "win"),
+        Options(strategy = strategy))) == collectSorted(IntervalJoin.intervalJoin(l, r, "span" -> "win")))
     // float FLOAT side vs DOUBLE side: both floating -> widened, joins fine
     val rf = Seq((10L, 2.0f, 3.5f)).toDF("rid", "s", "e")
       .select(col("rid"), IntervalCols.interval(col("s"), col("e")).as("win"))

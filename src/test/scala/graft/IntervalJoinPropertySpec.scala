@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import graft.expressions.DoubleTickKey
+import graft.intervals.{BoundedIntervals, IntervalCols}
 import graft.operators.IntervalJoin
 import graft.operators.IntervalJoin.{Options, Strategy}
 
@@ -193,6 +195,97 @@ class IntervalJoinPropertySpec extends SparkSuite {
         col("span.start") =!= greatest(col("span_left.start"), col("span_right.start")) ||
         col("span.stop") =!= least(col("span_left.stop"), col("span_right.stop")))
       assert(bad.count() == 0, s"seed=$seed")
+    }
+  }
+
+  /** One endpoint type of the form matrix: a pool of raw values of type
+    * `raw`, and the conversion to the endpoint type. Drawing both ends of
+    * every interval from a small pool makes ties, touching ends, empty and
+    * reversed rows common. */
+  private case class Pool(name: String, raw: DataType, values: Seq[Any],
+      to: Column => Column = identity)
+
+  private val usMin = -62135596800000000L // 0001-01-01 00:00:00
+  private val usMax = 253402300799999999L // 9999-12-31 23:59:59.999999
+  private val pools = Seq(
+    Pool("int", IntegerType, Seq(Int.MinValue, -1, 0, 1, 2, 3, Int.MaxValue)),
+    Pool("long", LongType, Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, 2L, 3L,
+      Long.MaxValue - 1, Long.MaxValue)),
+    Pool("float", FloatType, Seq(Float.NegativeInfinity, -1.5f, -Float.MinPositiveValue,
+      -0.0f, 0.0f, Float.MinPositiveValue, 1.0f, Math.nextUp(1.0f), Float.MaxValue,
+      Float.PositiveInfinity, Float.NaN)),
+    Pool("double", DoubleType, Seq(Double.NegativeInfinity, -Double.MaxValue, -1.0,
+      -Double.MinPositiveValue, -0.0, 0.0, Double.MinPositiveValue, 1e-310, 1.0,
+      Math.nextUp(1.0), Double.MaxValue, Double.PositiveInfinity,
+      java.lang.Double.longBitsToDouble(0x7ff0000000000001L), Double.NaN)),
+    Pool("date", IntegerType, Seq(-719162, -1, 0, 1, 2, 2932896), c => date_from_unix_date(c)),
+    Pool("timestamp", LongType, Seq(usMin, -1L, 0L, 1L, 2L, usMax), c => timestamp_micros(c)),
+    Pool("timestamp_ntz", LongType, Seq(usMin, -1L, 0L, 1L, 2L, usMax),
+      c => timestamp_micros(c).cast(TimestampNTZType)))
+
+  /** `id_<tag>`, the bounded interval `b` and its half-open view `h`: random
+    * rows from the pool with random bound flags (all four closedness
+    * pairs), plus the pool's widest interval and its top closed point. */
+  private def poolFrame(p: Pool, seed: Long, tag: String) = {
+    val rng = new scala.util.Random(seed)
+    def draw = p.values(rng.nextInt(p.values.length))
+    val rows = (0 until 14).map(_ => (draw, draw, rng.nextBoolean(), rng.nextBoolean())) ++
+      Seq((p.values.head, p.values.last, true, true), (p.values.last, p.values.last, true, true))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("s", p.raw),
+      StructField("e", p.raw), StructField("lc", BooleanType), StructField("rc", BooleanType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.zipWithIndex.map { case ((s, e, lc, rc), i) => Row(i.toLong, s, e, lc, rc) }, 2),
+        schema)
+      .select(col("id").as(s"id_$tag"),
+        BoundedIntervals.bounded(p.to(col("s")), p.to(col("e")), col("lc"), col("rc")).as("b"),
+        IntervalCols.interval(p.to(col("s")), p.to(col("e"))).as("h"))
+  }
+
+  /** A row with every floating value as its raw bits, so −0.0 and NaN
+    * payloads count as different values. */
+  private def bits(v: Any): Any = v match {
+    case d: Double => ("d", java.lang.Double.doubleToRawLongBits(d))
+    case f: Float  => ("f", java.lang.Float.floatToRawIntBits(f))
+    case r: Row    => r.toSeq.map(bits)
+    case x         => x
+  }
+  private def multiset(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.map(bits).groupBy(identity).view.mapValues(_.size).toMap
+
+  test("form matrix: every endpoint type, closedness pair and edge value joins alike on every strategy") {
+    // the tick key orders doubles as Spark SQL does
+    val ds = pools.find(_.name == "double").get.values.map(_.asInstanceOf[Double])
+    for (a <- ds; b <- ds)
+      assert(Integer.signum(java.lang.Long.compare(DoubleTickKey.key(a), DoubleTickKey.key(b))) ==
+        Integer.signum(org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a, b)),
+        s"$a vs $b")
+    for ((p, i) <- pools.zipWithIndex) {
+      val l = poolFrame(p, 500L + i, "l")
+      val r = poolFrame(p, 600L + i, "r")
+      // bounded x bounded, half-open x bounded, and half-open x half-open
+      // (dates have no half-open form)
+      val forms = Seq(("b", "b"), ("h", "b")) ++ (if (p.name == "date") Nil else Seq(("h", "h")))
+      for ((lOn, rOn) <- forms) {
+        val lf = l.select(col("id_l"), col(lOn).as("span"))
+        val rf = r.select(col("id_r"), col(rOn).as("win"))
+        def join(o: Options) = IntervalJoin.intervalJoin(lf, rf, ("span", "win"), o)
+        // the predicate the join evaluated before ticks: no pair may be lost
+        val before =
+          if (rOn == "h") IntervalCols.overlaps(col("span"), col("win"))
+          else BoundedIntervals.overlapsBounded(
+            if (lOn == "b") col("span") else BoundedIntervals.fromHalfOpen(col("span")), col("win"))
+        val case_ = s"${p.name} $lOn x $rOn"
+        val range = join(Options(strategy = Strategy.Range))
+        assert(multiset(range.select("id_l", "id_r")) ==
+          multiset(lf.crossJoin(rf).where(before).select("id_l", "id_r")), case_)
+        val rangeRows = multiset(range)
+        for (strat <- Seq(Strategy.Binned, Strategy.Sweep, Strategy.Auto))
+          assert(multiset(join(Options(strategy = strat))) == rangeRows, s"$case_ $strat")
+        // full outer: Auto with every side "big" runs the binned outer plan
+        val outer = Options(keepleft = true, keepright = true)
+        assert(multiset(join(outer.copy(maxRangeRows = 0L))) ==
+          multiset(join(outer.copy(strategy = Strategy.Range))), s"$case_ full outer")
+      }
     }
   }
 }

@@ -235,6 +235,29 @@ class IntervalJoinSpec extends SparkSuite {
         Options(strategy = strat, checkMissing = false)).count()
       assert(n == expected, s"$strat")
     }
+    // outer joins keep a NULL-`on` row with a NULL `on` and a NULL
+    // intersection, in every interval form
+    import spark.implicits._
+    import graft.intervals.BoundedIntervals.bounded
+    val ids = Seq((1L, 0L, 10L), (2L, 5L, 6L)).toDF("id", "s", "e")
+    val ts = (c: String) => timestamp_micros(col(c))
+    val forms = Seq(
+      "long" -> (struct(col("s").as("start"), col("e").as("stop")),
+        struct(lit(0L).as("start"), lit(100L).as("stop"))),
+      "timestamp" -> (struct(ts("s").as("start"), ts("e").as("stop")),
+        struct(timestamp_micros(lit(0L)).as("start"), timestamp_micros(lit(100L)).as("stop"))),
+      "bounded" -> (bounded(col("s"), col("e"), lit(true), lit(false)),
+        struct(lit(0L).as("start"), lit(100L).as("stop"))))
+    for ((form, (l, r)) <- forms; strat <- Seq(Strategy.Range, Strategy.Binned)) {
+      val left = ids.select(col("id"), when(col("id") === 2L, lit(null)).otherwise(l).as("span"))
+      val right = ids.limit(1).select(col("id").as("rid"), r.as("span"))
+      val rows = IntervalJoin.intervalJoin(left, right, "span",
+          Options(strategy = strat, keepleft = true, checkMissing = false))
+        .where(col("id") === 2L).collect()
+      assert(rows.length == 1, s"$form $strat")
+      for (c <- Seq("span_left", "rid", "span"))
+        assert(rows.head.isNullAt(rows.head.fieldIndex(c)), s"$form $strat: $c is not NULL")
+    }
   }
 
   test("sweep strategy: empty inputs and empty-one-side") {

@@ -69,8 +69,8 @@ class PlanShapeSpec extends SparkSuite {
     "q147_exact_quantiles",
     // (q137_label_agreement left this list in round 8: its neighbor pass is
     // now ivfTopK over a hash-sampled query side — list-id equi-join, no NLJ)
-    // range-only generalized joins against tiny window frames (nation/region
-    // broadcast; bounded/float intervals have no tick space to bin)
+    // generalized joins (bounded day ticks, float spans) against the tiny
+    // nation/region window frames: Auto broadcasts the small side
     "q52_interval_join_bounded", "q53_interval_join_float",
     // coverage join against the 500-row generated window frame (same Auto
     // broadcast as q02; flips to binned when both sides are big)
