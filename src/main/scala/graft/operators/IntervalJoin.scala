@@ -19,7 +19,14 @@ import graft.intervals.IntervalCols._
   * cartesian product (fatal for big×big).
   *
   *  - [[Strategy.Range]] — emit the raw theta join and let Catalyst pick
-  *    (auto-broadcasts the small side). Correct for all inputs.
+  *    (a broadcast nested loop when one side is small). Correct for all
+  *    inputs; the oracle the other strategies are checked against.
+  *  - [[Strategy.Index]] — the small-side path ([[IntervalIndex]]): the
+  *    smaller side (or the one under a `broadcast` hint) is collected once
+  *    while the frame is built, its ticks sorted by start under an implicit
+  *    augmented max-stop tree, and broadcast with its rows; a generator over
+  *    the other side looks each row up in O(log m + k), in the scan's own
+  *    stage. Every join type; the collect is capped by `maxRangeRows`.
   *  - [[Strategy.Binned]] — the scale path: each interval explodes to the
   *    fixed-width time bins it overlaps, the join becomes a shuffled
   *    **equi-join on bin** with the overlap predicate as residual, and each
@@ -30,12 +37,12 @@ import graft.intervals.IntervalCols._
   *  - [[Strategy.Sweep]] — range-partitioned plane sweep ([[SweepJoin]]);
   *    inner joins only.
   *  - [[Strategy.Auto]] — for an inner join, Binned on the windows' own
-  *    grid when either `on` column carries a [[QuantileWindows]] grid hint
-  *    (outer joins keep the pick below: the binned outer plan's matched-flag
-  *    window shuffle made them slower than the broadcast nested loop against
-  *    a small window frame); else Range when the
-  *    smaller side is small in both bytes and estimated rows
-  *    (`maxRangeRows`), else Sweep for inner joins and Binned otherwise.
+  *    grid when either `on` column carries a [[QuantileWindows]] grid hint;
+  *    else Index when the side it would collect is small in both bytes
+  *    (Spark's broadcast threshold) and estimated rows (`maxRangeRows`), and
+  *    the collect finds at most `maxRangeRows` rows; else Sweep for inner
+  *    joins and Binned otherwise. Endpoints with no long tick (strings,
+  *    decimals wider than 18 digits) always run Range.
   *
   * The binned plan's cells come from, in order: an explicit `binWidth`
   * (cells `x div binWidth`); the grid hint `{lo, hi, n}` that
@@ -84,6 +91,8 @@ object IntervalJoin {
   object Strategy {
     case object Auto   extends Strategy
     case object Range  extends Strategy
+    /** Broadcast interval index over the small side ([[IntervalIndex]]). */
+    case object Index  extends Strategy
     case object Binned extends Strategy
     /** v3: range-partitioned per-partition plane sweep ([[SweepJoin]]) —
       * quantile-balanced partitions, stop-ordered active lists, streamed
@@ -104,15 +113,13 @@ object IntervalJoin {
       strategy: Strategy = Strategy.Auto,
       binWidth: Option[Long] = None,
       checkMissing: Boolean = true,
-      /** Auto picks the broadcast range join only when the smaller side's
-        * estimated ROW count stays under this. Broadcast-small-in-bytes is
-        * the right gate for a hash join but the wrong one for a theta join:
-        * a BNLJ evaluates smallRows × bigRows predicate pairs, so a 10 MB /
-        * 100 k-row side against a same-sized stream side is 10^10 pair
-        * evaluations — minutes, while the binned/sweep paths do it in
-        * seconds. A genuinely small window frame (10^2-10^4 rows) against
-        * an arbitrarily big side remains the broadcast shape: the big side
-        * never shuffles, which is the correct 100 TB trade. */
+      /** The most rows the index strategy collects from its side. The
+        * collect is a `limit` of one row more, so a side that is bigger
+        * than its estimate costs one capped scan: Auto then falls back to
+        * the scale path (Sweep for inner joins, Binned otherwise), and a
+        * forced `Strategy.Index` fails. Auto also needs the side's
+        * estimated rows under this before it tries (Catalyst's row count
+        * when known, else a conservative sizeInBytes/64). */
       maxRangeRows: Long = 10000L,
       /** Sweep fat-tail guard: intervals LONGER than this route to
         * broadcast side-joins instead of replicating across every range
@@ -147,9 +154,11 @@ object IntervalJoin {
     * pair with the point inside the half-open interval. Points lift to
     * degenerate one-tick spans — in an integral tick space
     * `t ∈ [s, e)` ⇔ `[t, t+1) overlaps [s, e)` exactly — and run through
-    * [[intervalJoin]], so every physical strategy (broadcast range, binned
-    * equi-join, sweep) applies unchanged; a point explodes to exactly one
-    * bin on the binned path. Output: the point frame's columns then the
+    * [[intervalJoin]], so every physical strategy applies unchanged. Auto
+    * probes an index when either side is small — ahead of a grid hint, as a
+    * point's lookup costs O(log m) whatever the intervals' lengths — and
+    * otherwise bins, where a point explodes to exactly one bin. Output:
+    * the point frame's columns then the
     * interval frame's columns under the usual rename contract, with the
     * synthetic span and the (redundant, point-valued) intersection dropped.
     * Timestamp points pair with timestamp-struct intervals on the µs tick
@@ -180,23 +189,18 @@ object IntervalJoin {
         s"stab_join requires an integral or timestamp point column; `$ptName` is " +
           s"${other.simpleString} — quantize floating points to integer ticks first.")
     }
-    // Auto resolves to Binned here, not the general join's broadcast-range
-    // pick: a broadcast theta join scans EVERY interval per point (points ×
-    // intervals predicate evals — quadratic even when the interval side
-    // fits in a broadcast), while the binned equi-join hashes each point
-    // into exactly one bin for near-constant per-point work. The general
-    // join's trade (small side broadcast, big side unshuffled) loses here
-    // because the probe is linear, not hashed.
-    val stabOpts =
-      if (opts.strategy == Strategy.Auto) opts.copy(strategy = Strategy.Binned)
-      else opts
-    val j = intervalJoin(lifted, intervals, tmp -> ivName, stabOpts)
+    val j = join(lifted, intervals, tmp -> ivName, opts, points = true)
     // left `on` keeps its renamed slot and the intersection takes the left
     // name itself (the reference's contract) — both are the degenerate span
     j.drop(opts.renameon._1(tmp)).drop(tmp)
   }
 
-  def intervalJoin(left: DataFrame, right: DataFrame, on: (String, String), opts: Options): DataFrame = {
+  def intervalJoin(left: DataFrame, right: DataFrame, on: (String, String), opts: Options): DataFrame =
+    join(left, right, on, opts, points = false)
+
+  /** The one join pipeline; `points` marks a stab join's lifted points. */
+  private def join(left: DataFrame, right: DataFrame, on: (String, String), opts: Options,
+      points: Boolean): DataFrame = {
     val (lOnName, rOnName) = on
     require(left.columns.contains(lOnName), s"left frame has no column `$lOnName`")
     require(right.columns.contains(rOnName), s"right frame has no column `$rOnName`")
@@ -225,9 +229,9 @@ object IntervalJoin {
     }
     val l2 = project(left, lTmp, lOnT, "__lv", isLeft = true)
     val r2 = project(right, rTmp, rOnT, "__rv", isLeft = false)
-    val (lV, rV) =
-      if (form.ticks.isDefined) (col("__lv"), col("__rv")) else (col(lOnT), col(rOnT))
-    // a residual alone is exact; its ticks only narrow the scale paths
+    val (lVName, rVName) = if (form.ticks.isDefined) ("__lv", "__rv") else (lOnT, rOnT)
+    val (lV, rV) = (col(lVName), col(rVName))
+    // a residual alone is exact; its ticks only narrow the other strategies
     val residual = form.residual(lV, rV)
     val overlap = residual.getOrElse(overlaps(col(lOnT), col(rOnT)))
 
@@ -240,33 +244,46 @@ object IntervalJoin {
 
     // endpoint types with no order-preserving long tick (strings, wide
     // decimals) share the one tick [0, 1): only the residual tells rows
-    // apart, so a scale strategy would compare every pair in one task
+    // apart, so any other strategy would compare every pair
     val endpoint = left.schema(lOnName).dataType.asInstanceOf[StructType]("start").dataType
     val keyed = tickOf(endpoint).isDefined
     // quantileWindows' grid on either side: an inner join bins on it — no
-    // stats pass, and no nested loop of every span against every window
+    // stats pass, and no lookup of every span in a window index
     val grid = QuantileWindows.gridOf(left, lOnName)
       .orElse(QuantileWindows.gridOf(right, rOnName)).flatMap(gridCell)
+    val lSide = IntervalIndex.Side(l2, lOnT, lVName)
+    val rSide = IntervalIndex.Side(r2, rOnT, rVName)
+    lazy val indexLeft = IntervalIndex.indexesLeft(lSide, rSide)
+    // big-big: the per-partition sweep beats the binned equi-join on inner
+    // joins (measured 1.4x at 29 M pairs, 2.8x at 500 M — and the gap
+    // WIDENS with scale); outer variants and stab joins bin
+    val scalePath = if (joinType == "inner" && !points) Strategy.Sweep else Strategy.Binned
     val strategy = opts.strategy match {
-      case Strategy.Binned | Strategy.Sweep if !keyed => throw new IllegalArgumentException(
-        s"the ${opts.strategy} strategy joins on order-preserving long ticks, and " +
-          s"${endpoint.simpleString} interval endpoints have none; they join " +
-          "on Strategy.Range — cast the endpoints to an integral, date, timestamp, floating " +
-          "or decimal(18) type to use the scale paths.")
+      case Strategy.Index | Strategy.Binned | Strategy.Sweep if !keyed =>
+        throw new IllegalArgumentException(
+          s"the ${opts.strategy} strategy joins on order-preserving long ticks, and " +
+            s"${endpoint.simpleString} interval endpoints have none; they join " +
+            "on Strategy.Range — cast the endpoints to an integral, date, timestamp, floating " +
+            "or decimal(18) type to use the other strategies.")
       case Strategy.Auto if !keyed => Strategy.Range
-      case Strategy.Auto if joinType == "inner" && grid.isDefined => Strategy.Binned
-      case Strategy.Auto if rangeJoinViable(l2, r2, opts) => Strategy.Range
-      // big-big: the per-partition sweep beats the binned equi-join on
-      // inner joins (measured 1.4x at 29 M pairs, 2.8x at 500 M — and the
-      // gap WIDENS with scale); outer variants run on the binned path
-      case Strategy.Auto if joinType == "inner" => Strategy.Sweep
-      case Strategy.Auto => Strategy.Binned
+      case Strategy.Auto if joinType == "inner" && grid.isDefined && !points => Strategy.Binned
+      case Strategy.Auto if smallEnough(if (indexLeft) l2 else r2, opts) => Strategy.Index
+      case Strategy.Auto => scalePath
       case s => s
     }
 
     def cell = opts.binWidth.map(widthCell).orElse(grid)
       .orElse(statsCell(l2, r2, lOnT, rOnT))
-    val joined = strategy match {
+    def run(strategy: Strategy): DataFrame = strategy match {
+      case Strategy.Index =>
+        IntervalIndex.join(lSide, rSide, residual, indexLeft, opts.keepleft, opts.keepright,
+          opts.maxRangeRows).getOrElse {
+          if (opts.strategy == Strategy.Index) throw new IllegalArgumentException(
+            s"Strategy.Index collects at most maxRangeRows = ${opts.maxRangeRows} rows from " +
+              s"the ${if (indexLeft) "left" else "right"} side, which has more; raise " +
+              "maxRangeRows or use Strategy.Auto")
+          run(scalePath)
+        }
       case Strategy.Sweep if joinType == "inner" =>
         val swept = SweepJoin.sweepInner(l2, r2, lOnT, rOnT, opts)
         residual.fold(swept)(swept.where)
@@ -275,10 +292,10 @@ object IntervalJoin {
       case Strategy.Binned | Strategy.Sweep =>
         binnedOuter(l2, r2, lOnT, rOnT, overlap, residual, joinType, opts, cell)
       case _ =>
-        // Theta join; Catalyst broadcasts the small side (BNLJ) — right for
-        // a small frame without a grid hint.
+        // Theta join; Catalyst broadcasts the small side (BNLJ)
         l2.join(r2, overlap, joinType)
     }
+    val joined = run(strategy)
 
     // Output intersection column keeps the LEFT frame's `on` name (ref :76).
     val outCols = (lTmp ++ rTmp).zip(finalNames).map { case (t, f) =>
@@ -601,27 +618,20 @@ object IntervalJoin {
   /** ceil(a / b) for a >= 1, b >= 1, without overflow near Long.MaxValue. */
   private def ceilDiv(a: Long, b: Long): Long = (a - 1) / b + 1
 
-  /** Auto's gate for the broadcast range/theta join: one side must be
+  /** Auto's gate for the index join: the side it would collect must be
     * broadcastable in BYTES (Spark's own threshold — handles byte-string
-    * confs) AND small in estimated ROWS (`Options.maxRangeRows`) — a BNLJ's
-    * cost is the pair-count product, so bytes alone under-gates it (a
-    * measured 50 k × 50 k self-join slipped under a 10 MB threshold and ran
-    * a 2.5 G-pair nested loop ~9x slower than the binned path). Row counts
-    * use Catalyst's estimate when known (generated ranges, CBO) and a
+    * confs) AND small in estimated ROWS (`Options.maxRangeRows`), so the
+    * capped collect rarely finds more and falls back. Row counts use
+    * Catalyst's estimate when known (generated ranges, CBO) and a
     * conservative sizeInBytes/64 otherwise — compressed parquet averages
     * well over 64 B/row uncompressed, so the estimate errs toward MORE rows,
-    * i.e. toward the scale paths. */
-  private def rangeJoinViable(l2: DataFrame, r2: DataFrame, opts: Options): Boolean = {
-    val thresh = l2.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (thresh <= 0) return false
-    val lStats = l2.queryExecution.optimizedPlan.stats
-    val rStats = r2.queryExecution.optimizedPlan.stats
-    def rows(s: org.apache.spark.sql.catalyst.plans.logical.Statistics): BigInt =
-      s.rowCount.getOrElse(s.sizeInBytes / 64)
-    val (smallStats, smallRows) =
-      if (lStats.sizeInBytes <= rStats.sizeInBytes) (lStats, rows(lStats))
-      else (rStats, rows(rStats))
-    smallStats.sizeInBytes <= thresh && smallRows <= opts.maxRangeRows
+    * i.e. toward the scale paths. Streaming sides have no estimate. */
+  private def smallEnough(side: DataFrame, opts: Options): Boolean = {
+    val thresh = side.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (thresh <= 0 || side.isStreaming) return false
+    val stats = side.queryExecution.optimizedPlan.stats
+    stats.sizeInBytes <= thresh &&
+      stats.rowCount.getOrElse(stats.sizeInBytes / 64) <= opts.maxRangeRows
   }
 
   /** The reference's output-naming contract: left columns then right columns, `on` columns renamed by

@@ -11,6 +11,18 @@ import QueryFixtures._
   * their append and delete legs. */
 private[graft] object DedupQueries {
 
+  /** Where q64, q203 and q209 persist their band indexes: a directory of
+    * this JVM's, deleted when it exits, so an index never outlives the code
+    * that wrote it. The first run in a JVM (Bench's warm-up) builds each
+    * index; later runs only probe it. */
+  private lazy val indexDir: java.io.File = {
+    val d = java.nio.file.Files.createTempDirectory("graft_indexes").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d
+  }
+
+  private def indexPath(name: String): String = new java.io.File(indexDir, name).getPath
+
   /** q46's full clusters replay (simhash → hamming-≤2 edges → recursive
     * min-reachability CC), shared with q138's size-histogram rollup. */
   private lazy val q46ClustersSql: String = {
@@ -233,14 +245,13 @@ private[graft] object DedupQueries {
       // cost and the one-row-group source hands them to a single task
       val fresh = graft.sources.Scans.parallelized(
         docs.where(pmod(col("doc_id"), lit(2L)) === 1L))
-      // The index is built ONCE per testdata version — the production cost
-      // model (history pays signatures at write time, each batch only
-      // probes). The cache key is the full sanitized dir path + the source
-      // parquet's latest mtime, so neither a path-hash collision nor
-      // regenerated testdata can ever serve a stale index; the sidecar is
+      // The index is built ONCE per JVM and testdata version — the
+      // production cost model (history pays signatures at write time, each
+      // batch only probes). The cache key is the full sanitized dir path +
+      // the source parquet's latest mtime, so neither a path-hash collision
+      // nor regenerated testdata can serve a stale index; the sidecar is
       // written after the data, so its presence implies a complete index.
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_band_index_${datasetStamp(dir)}").getPath
+      val path = indexPath(s"graft_band_index_${datasetStamp(dir)}")
       if (Dedup.readIndexMeta(sp, path).isEmpty)
         Dedup.writeBandIndex(hist, "text", "doc_id", path)
       Dedup.nearDupAgainstIndex(fresh, "text", "doc_id", path, threshold = 0.5)
@@ -858,8 +869,7 @@ private[graft] object DedupQueries {
       val docs = table(sp, dir, "documents")
       val fresh = graft.sources.Scans.parallelized(
         docs.where(pmod(col("doc_id"), lit(2L)) === 1L))
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_band_index_incr_${datasetStamp(dir)}").getPath
+      val path = indexPath(s"graft_band_index_incr_${datasetStamp(dir)}")
       val done = new java.io.File(path, "_graft_incr_done")
       if (!done.exists()) {
         val dirF = new java.io.File(path)
@@ -947,8 +957,7 @@ private[graft] object DedupQueries {
       val docs = table(sp, dir, "documents")
       val fresh = graft.sources.Scans.parallelized(
         docs.where(pmod(col("doc_id"), lit(2L)) === 1L))
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_band_index_del_${datasetStamp(dir)}").getPath
+      val path = indexPath(s"graft_band_index_del_${datasetStamp(dir)}")
       val done = new java.io.File(path, "_graft_del_done")
       if (!done.exists()) {
         val dirF = new java.io.File(path)

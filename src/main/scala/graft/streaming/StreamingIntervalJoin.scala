@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.intervals.IntervalCols._
+import graft.operators.IntervalJoin
 
 /** Structured Streaming variants of the interval operators (beyond the
   * reference's batch-only surface — SURVEY §7 stretch; the reference has no
@@ -11,9 +12,9 @@ import graft.intervals.IntervalCols._
   * Two shapes:
   *
   *  - [[joinStreamStatic]]: streaming intervals × static window/dimension
-  *    frame. A stream-static inner join is stateless in Spark — each
-  *    micro-batch joins against the (broadcast) static side; safe in
-  *    `append` mode at any scale.
+  *    frame. A stream-static inner join is stateless — each micro-batch
+  *    probes an index over the static side, built once; safe in `append`
+  *    mode at any scale.
   *  - [[joinStreamStream]]: stream×stream overlap join. Both sides carry
   *    event-time watermarks on their interval start; the join condition
   *    adds explicit time-range bounds relating the two event-time columns
@@ -28,19 +29,17 @@ object StreamingIntervalJoin {
 
   /** Overlap-join a stream of intervals (`on` struct column) against a
     * small static frame (e.g. `quantileWindows` output), appending the
-    * intersection column named after the stream's `on` column.
-    * Column naming follows the batch operator's contract (left = stream). */
+    * intersection column named after the stream's `on` column. The static
+    * side is indexed once, when the frame is built ([[IntervalJoin]]'s
+    * `Strategy.Index`, whatever its size — it is the declared small side),
+    * and every micro-batch probes that index. Column naming follows the
+    * batch operator's contract (left = stream); rows with a NULL `on` value
+    * match nothing. */
   def joinStreamStatic(stream: DataFrame, static: DataFrame,
       on: (String, String),
-      renameon: (String => String, String => String) = (_ + "_left", _ + "_right")): DataFrame = {
-    val (lOn, rOn) = on
-    val lOnF = renameon._1(lOn)
-    val rOnF = renameon._2(rOn)
-    val l = stream.withColumnRenamed(lOn, lOnF)
-    val r = static.withColumnRenamed(rOn, rOnF)
-    l.join(broadcast(r), overlaps(col(lOnF), col(rOnF)), "inner")
-      .withColumn(lOn, intersection(col(lOnF), col(rOnF)))
-  }
+      renameon: (String => String, String => String) = (_ + "_left", _ + "_right")): DataFrame =
+    IntervalJoin.intervalJoin(stream, static, on, IntervalJoin.Options(renameon = renameon,
+      checkMissing = false, strategy = IntervalJoin.Strategy.Index, maxRangeRows = Long.MaxValue))
 
   /** Streaming sessionization — the streaming variant of
     * `IntervalOps.sessionize` (gap-split event sessions per key), built on

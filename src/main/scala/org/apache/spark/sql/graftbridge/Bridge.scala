@@ -1,8 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
 /** Expression <-> Column bridge. Spark 4 hides the classic converters
   * behind `private[sql]`; extensions that ship custom Catalyst expressions
@@ -18,4 +23,16 @@ object Bridge {
     * uncodegen-able) when returned from a FunctionRegistry builder. */
   def resolvableExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** `df.collect()` without the conversion to `Row`: the Catalyst rows
+    * themselves, in one tracked SQL execution as `collect` runs. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** A frame over Catalyst rows of `schema` (a local relation). */
+  def localFrame(df: DataFrame, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    Dataset.ofRows(df.sparkSession.asInstanceOf[SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

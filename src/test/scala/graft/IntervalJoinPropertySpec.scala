@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, Row}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.expressions.DoubleTickKey
 import graft.intervals.{BoundedIntervals, IntervalCols}
-import graft.operators.IntervalJoin
+import graft.operators.{IntervalIndex, IntervalJoin}
 import graft.operators.IntervalJoin.{Options, Strategy}
 
 /** Property tests (SURVEY §5): over random interval sets, every physical
@@ -286,6 +288,116 @@ class IntervalJoinPropertySpec extends SparkSuite {
         assert(multiset(join(outer.copy(maxRangeRows = 0L))) ==
           multiset(join(outer.copy(strategy = Strategy.Range))), s"$case_ full outer")
       }
+    }
+  }
+
+  test("interval index: the implicit max-stop tree finds exactly the brute-force overlaps") {
+    val rng = new scala.util.Random(7L)
+    for (n <- Seq(0, 1, 2, 3, 7, 8, 15, 16, 17, 31, 64, 100, 257, 1000)) {
+      // short spans, a few domain-long ones, and empty / reversed / NULL rows
+      val spans = Seq.fill(n) {
+        rng.nextInt(20) match {
+          case 0 => Some((rng.nextInt(100).toLong, 10000L + rng.nextInt(100)))
+          case 1 => val s = rng.nextInt(10000).toLong; Some((s, s - rng.nextInt(3)))
+          case 2 => None
+          case _ => val s = rng.nextInt(10000).toLong; Some((s, s + 1 + rng.nextInt(50)))
+        }
+      }
+      val rows = spans.map(o => InternalRow(o.map { case (s, e) => InternalRow(s, e) }.orNull))
+      val index = IntervalIndex(rows.toArray, 0, LongType)
+      for (_ <- 0 until 200) {
+        val qs = rng.nextInt(10100).toLong - 50
+        val qe = qs + 1 + rng.nextInt(if (rng.nextBoolean()) 5 else 2000)
+        val got = Seq.newBuilder[Int]
+        index.foreachOverlap(qs, qe)(got += _)
+        val want = spans.indices.filter(i => spans(i).exists { case (s, e) =>
+          s < e && s < qe && qs < e })
+        assert(got.result().sorted == want, s"n=$n [$qs, $qe)")
+      }
+    }
+  }
+
+  /** A frame as a local relation: Catalyst knows its size, so Auto sees a
+    * small side. */
+  private def local(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  private def planOf(df: DataFrame) = df.queryExecution.executedPlan.toString
+
+  /** Index with the left and with the right side indexed, and Auto, give
+    * Range's rows bit for bit, for inner, left, right and full joins; Auto
+    * plans the probe. */
+  private def assertIndexAgrees(l: DataFrame, r: DataFrame, on: (String, String),
+      case_ : String, opts: Options = Options()): Unit =
+    for ((kl, kr) <- Seq((false, false), (true, false), (false, true), (true, true))) {
+      def join(a: DataFrame, b: DataFrame, s: Strategy) =
+        IntervalJoin.intervalJoin(a, b, on, opts.copy(keepleft = kl, keepright = kr, strategy = s))
+      val what = s"$case_ keepleft=$kl keepright=$kr"
+      val want = multiset(join(l, r, Strategy.Range))
+      assert(multiset(join(broadcast(l), r, Strategy.Index)) == want, s"$what, left indexed")
+      assert(multiset(join(l, broadcast(r), Strategy.Index)) == want, s"$what, right indexed")
+      val auto = join(l, r, Strategy.Auto)
+      assert(planOf(auto).contains("interval_probe"), s"$what: Auto plans no probe")
+      assert(multiset(auto) == want, s"$what, Auto")
+    }
+
+  test("index join: the form matrix joins alike with either side indexed, every join type") {
+    for ((p, i) <- pools.zipWithIndex) {
+      val l = local(poolFrame(p, 500L + i, "l"))
+      val r = local(poolFrame(p, 600L + i, "r"))
+      val forms = Seq(("b", "b"), ("h", "b")) ++ (if (p.name == "date") Nil else Seq(("h", "h")))
+      for ((lOn, rOn) <- forms)
+        assertIndexAgrees(l.select(col("id_l"), col(lOn).as("span")),
+          r.select(col("id_r"), col(rOn).as("win")), "span" -> "win", s"${p.name} $lOn x $rOn")
+    }
+  }
+
+  /** Fat-tailed long spans with domain-long, empty, reversed and NULL rows. */
+  private def fatTailFrame(seed: Long, tag: String, n: Int): DataFrame = {
+    val g = for {
+      short <- Gen.listOfN(n, genInterval)
+      giant <- Gen.listOfN(3, Gen.chooseNum(0L, 1000L).map(s => (s, s + 200000L)))
+      deg <- Gen.listOfN(4, genMaybeDegenerate.map { case (s, e) => (e, s) })
+    } yield short ++ giant ++ deg
+    val spans = g.apply(Gen.Parameters.default, Seed(seed)).get.map(Option(_)) ++ Seq(None, None)
+    val schema = StructType(Seq(StructField(s"id_$tag", LongType, nullable = false),
+      StructField("span", spanSchema, nullable = true)))
+    spark.createDataFrame(spans.zipWithIndex.map { case (o, i) =>
+      Row(i.toLong, o.map { case (s, e) => Row(s, e) }.orNull)
+    }.asJava, schema)
+  }
+
+  test("index join: fat tails, empty, reversed and NULL rows, either side indexed, every join type") {
+    val opts = Options(checkMissing = false)
+    for (seed <- 700 to 702) {
+      val l = fatTailFrame(seed.toLong, "l", 40)
+      val r = fatTailFrame(seed + 50L, "r", 25)
+      assertIndexAgrees(l, r, "span" -> "span", s"seed=$seed", opts)
+      assertIndexAgrees(r, l, "span" -> "span", s"seed=$seed swapped", opts)
+    }
+    // an empty indexed or streamed side
+    val l = fatTailFrame(703L, "l", 30)
+    val r = fatTailFrame(704L, "r", 30)
+    assertIndexAgrees(l, r.limit(0), "span" -> "span", "empty right", opts)
+    assertIndexAgrees(l.limit(0), r, "span" -> "span", "empty left", opts)
+  }
+
+  test("index join: the same rows under 1 and 200 shuffle partitions, AQE off and whole-stage codegen off") {
+    val l = fatTailFrame(710L, "l", 40)
+    val r = fatTailFrame(711L, "r", 25)
+    val b = local(poolFrame(pools.find(_.name == "double").get, 712L, "r"))
+      .select(col("id_r"), col("b").as("win"))
+    val d = local(poolFrame(pools.find(_.name == "double").get, 713L, "l"))
+      .select(col("id_l"), col("h").as("span"))
+    for ((key, value) <- Seq("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.shuffle.partitions" -> "200", "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.codegen.wholeStage" -> "false")) {
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try {
+        assertIndexAgrees(l, r, "span" -> "span", s"$key=$value", Options(checkMissing = false))
+        assertIndexAgrees(d, b, "span" -> "win", s"$key=$value, double x bounded")
+      } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 }

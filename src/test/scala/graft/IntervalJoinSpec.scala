@@ -178,11 +178,15 @@ class IntervalJoinSpec extends SparkSuite {
   }
 
   test("Auto strategy: small side -> theta/broadcast; big-big -> sweep (inner) / binned (outer)") {
-    // a fresh struct carries no grid hint: the small side broadcasts
+    // a fresh struct carries no grid hint: the small side is indexed and
+    // broadcast, and the other side probes it
     val plain = quarters.select(col("quarter"),
       struct(col("span.start").as("start"), col("span.stop").as("stop")).as("span"))
     val small = IntervalJoin.intervalJoin(df, plain, "span")
-    assert(small.queryExecution.executedPlan.toString.contains("NestedLoop"))
+    val smallPlan = small.queryExecution.executedPlan.toString
+    assert(smallPlan.contains("interval_probe") && !smallPlan.contains("NestedLoop"), smallPlan)
+    assertSameRows(small, IntervalJoin.intervalJoin(df, plain, "span",
+      Options(strategy = Strategy.Range)))
     // quantileWindows' own span column carries its grid: binned, no nested loop
     val hinted = IntervalJoin.intervalJoin(df, quarters, "span").queryExecution.executedPlan
       .toString

@@ -14,18 +14,12 @@ class PlanShapeSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   /** queries whose plan legitimately contains a BroadcastNestedLoopJoin at
-    * this SF: outer interval joins against a tiny window frame, and joins
-    * against a tiny frame without a grid hint (Auto strategy broadcasts;
-    * flips to the binned equi-join when both sides are big — pinned by
-    * IntervalJoinSpec's Auto test), and the two deliberate all-pairs
-    * brute-force baselines. Inner joins against `quantileWindows` frames bin
-    * on the windows' grid and must not appear here. */
+    * this SF: the two deliberate all-pairs brute-force baselines and the
+    * single-row broadcast crosses below. No interval join is here: against
+    * a small side every keyed interval form probes the broadcast interval
+    * index (pinned below), and inner joins against `quantileWindows` frames
+    * bin on the windows' grid. */
   private val bnljOk = Set(
-    "q03_interval_join_left", "q04_interval_join_right", "q05_interval_join_full",
-    // windows expanded by d: a recomputed span column carries no grid hint
-    "q101_near_join",
-    // the same tiny sparse-window broadcast, anti (keepleft) variant
-    "q118_interval_anti",
     "q15_ann_brute", "q30_embed_neardup_baseline",
     // single-row corpus-count broadcast (tf-idf idf factor / surprisal N /
     // the HLL estimate row x exact-distinct row / BM25's (N, avgdl) row)
@@ -69,12 +63,6 @@ class PlanShapeSpec extends SparkSuite {
     "q147_exact_quantiles",
     // (q137_label_agreement left this list in round 8: its neighbor pass is
     // now ivfTopK over a hash-sampled query side — list-id equi-join, no NLJ)
-    // generalized joins (bounded day ticks, float spans) against the tiny
-    // nation/region window frames: Auto broadcasts the small side
-    "q52_interval_join_bounded", "q53_interval_join_float",
-    // coverage join against the 500-row generated window frame (same Auto
-    // broadcast as q02; flips to binned when both sides are big)
-    "q83_window_coverage",
     // inherits q74's single-row (N, avgdl) broadcast cross and q15's
     // declared brute-force baseline — the fuse itself is an equi-join
     "q84_hybrid_rrf",
@@ -112,6 +100,25 @@ class PlanShapeSpec extends SparkSuite {
       assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian product")
       if (!bnljOk(name))
         assert(!plan.contains("NestedLoop"), s"$name unexpectedly plans a nested-loop join")
+    }
+  }
+
+  test("interval joins against a small side probe the interval index, not a nested loop or bins") {
+    // outer joins and hint-less windows (q03-q05, q52, q53, q101, q118),
+    // and the stab joins (q60, q106), which probe ahead of a grid (q83's
+    // inner join bins on its windows' grid, and left `bnljOk` with these)
+    for (q <- Seq("q03_interval_join_left", "q04_interval_join_right",
+        "q05_interval_join_full", "q52_interval_join_bounded", "q53_interval_join_float",
+        "q101_near_join", "q118_interval_anti",
+        "q60_stab_join", "q106_grid_resample")) {
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+      assert(plan.contains("interval_probe"), s"$q plans no index probe:\n$plan")
+      assert(!plan.contains("NestedLoop"), s"$q plans a nested loop:\n$plan")
+    }
+    for (q <- Seq("q60_stab_join", "q106_grid_resample")) {
+      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+      // no bin explode, so no exchange on the bins
+      assert(!plan.contains("__lbin") && !plan.contains("__rbin"), s"$q still bins:\n$plan")
     }
   }
 

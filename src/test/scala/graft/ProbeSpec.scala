@@ -28,14 +28,16 @@ class ProbeSpec extends SparkSuite {
 
   test("plans lists a query that fails to plan and still writes the others") {
     val out = Files.createTempDirectory("graft_plans")
-    val failed = Probe.plans(spark,
-      queries(
-        "ok" -> ((s, _) => s.range(3).toDF()),
-        "throws" -> ((_, _) => throw new IllegalStateException("boom"))),
-      "unused", out, Seq("ok", "throws"))
-    assert(failed == Seq("throws"))
-    assert(Files.exists(out.resolve("ok.txt")))
-    assert(!Files.exists(out.resolve("throws.txt")))
+    try {
+      val failed = Probe.plans(spark,
+        queries(
+          "ok" -> ((s, _) => s.range(3).toDF()),
+          "throws" -> ((_, _) => throw new IllegalStateException("boom"))),
+        "unused", out, Seq("ok", "throws"))
+      assert(failed == Seq("throws"))
+      assert(Files.exists(out.resolve("ok.txt")))
+      assert(!Files.exists(out.resolve("throws.txt")))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
   }
 
   test("time, phases and conf-ab run a query map and leave the session conf as they found it") {

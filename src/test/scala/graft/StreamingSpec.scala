@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.operators.QuantileWindows
+import graft.operators.{IntervalJoin, QuantileWindows}
 import graft.streaming.StreamingIntervalJoin
 
 class StreamingSpec extends SparkSuite {
@@ -34,6 +35,32 @@ class StreamingSpec extends SparkSuite {
       input.addData((4L, 100L, 300L))
       q.processAllAvailable()
       assert(spark.sql("SELECT * FROM sj WHERE id = 4").count() == 2)
+    } finally q.stop()
+  }
+
+  test("stream-static join: a 2-batch replay equals the batch intervalJoin of all its rows") {
+    implicit val sqlCtx = spark.sqlContext
+    val rng = new scala.util.Random(11L)
+    // spans over [-100, 1100): some outside every window, some empty
+    val rows = Seq.tabulate(60) { i =>
+      val s = rng.nextInt(1200).toLong - 100L
+      (i.toLong, s, s + rng.nextInt(300))
+    }
+    def spans(df: DataFrame) = df.select(col("_1").as("id"),
+      struct(col("_2").as("start"), col("_3").as("stop")).as("span"))
+    val wins = QuantileWindows.quantileWindows(spark, 7, 0L, 1000L, "span", "w")
+    val input = MemoryStream[(Long, Long, Long)]
+    val joined = StreamingIntervalJoin.joinStreamStatic(spans(input.toDF()), wins, "span" -> "span")
+    assert(joined.queryExecution.analyzed.toString.contains("interval_probe"))
+    val q = joined.writeStream.format("memory").queryName("sj2").outputMode("append").start()
+    try {
+      val (first, second) = rows.splitAt(25)
+      input.addData(first: _*)
+      q.processAllAvailable()
+      input.addData(second: _*)
+      q.processAllAvailable()
+      assertSameRows(spark.table("sj2"),
+        IntervalJoin.intervalJoin(spans(rows.toDF()), wins, "span"))
     } finally q.stop()
   }
 
@@ -786,7 +813,8 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming CMS/HLL sketches: cross-batch state equals the batch sketch of the union") {
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[String]
     val cms = graft.streaming.StreamingSketches.cmsStream(
       in.toDF().toDF("v"), "v", depth = 3, width = 16, salt = "s")
