@@ -65,7 +65,8 @@ private[graft] final class IntervalIndex private (val rows: Array[InternalRow],
     push((1 << rootK) - 1, rootK, done = false)
     while (t > 0) {
       t -= 1
-      val (i, k) = (node(t), level(t))
+      val i = node(t)
+      val k = level(t)
       if (k <= 3) {
         // a small subtree: scan its span of the sorted array
         var j = i >> k << k
@@ -159,8 +160,8 @@ private[graft] object IntervalIndex {
       val t = if (rows(i).isNullAt(ticksOrdinal)) null else rows(i).getStruct(ticksOrdinal, 2)
       if (t == null || t.isNullAt(0) || t.isNullAt(1)) None
       else {
-        val Seq(s, e) = Seq(0, 1).map(t.get(_, tickType).asInstanceOf[Number].longValue)
-        if (s < e) Some((s, e, i)) else None
+        def tick(j: Int) = t.get(j, tickType).asInstanceOf[Number].longValue
+        if (tick(0) < tick(1)) Some((tick(0), tick(1), i)) else None
       }
     }.sortBy(_._1)
     new IntervalIndex(rows, spans.map(_._1).toArray, spans.map(_._2).toArray, spans.map(_._3).toArray)
@@ -197,7 +198,8 @@ private[graft] object IntervalIndex {
     val (indexed, streamed) = if (indexLeft) (left, right) else (right, left)
     val schema = indexed.df.schema
     require(!schema.fieldNames.contains(IntervalProbe.Ordinal) &&
-      !streamed.df.columns.contains(IntervalProbe.Ordinal))
+      !streamed.df.columns.contains(IntervalProbe.Ordinal),
+      s"`${IntervalProbe.Ordinal}` is the index join's own column name")
     val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
     // one partition: a limited collect over several would scan them in
     // several jobs (the first partition, then more)

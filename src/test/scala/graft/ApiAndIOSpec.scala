@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.api._
 
@@ -10,13 +9,6 @@ import graft.api._
 class ApiAndIOSpec extends SparkSuite {
 
   lazy val df = fixture()
-
-  /** A fresh temp directory for `body`, removed with its contents after. */
-  private def withTempDir[A](prefix: String)(body: String => A): A = {
-    val dir = Files.createTempDirectory(prefix)
-    try body(dir.toString)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
 
   test("façade: quantileWindows + implicit intervalJoin syntax") {
     val quarters = quantileWindows(4, df, spancol = "span", label = "quarter")

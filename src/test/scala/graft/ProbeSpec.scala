@@ -27,8 +27,8 @@ class ProbeSpec extends SparkSuite {
   }
 
   test("plans lists a query that fails to plan and still writes the others") {
-    val out = Files.createTempDirectory("graft_plans")
-    try {
+    withTempDir("graft_plans") { dir =>
+      val out = java.nio.file.Paths.get(dir)
       val failed = Probe.plans(spark,
         queries(
           "ok" -> ((s, _) => s.range(3).toDF()),
@@ -37,7 +37,7 @@ class ProbeSpec extends SparkSuite {
       assert(failed == Seq("throws"))
       assert(Files.exists(out.resolve("ok.txt")))
       assert(!Files.exists(out.resolve("throws.txt")))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+    }
   }
 
   test("time, phases and conf-ab run a query map and leave the session conf as they found it") {

@@ -14,6 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = Session.build()
 
+  /** A fresh temp directory for `body`, removed with its contents after. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   def spanSchema: StructType = StructType(Seq(
     StructField("start", LongType, nullable = false),
     StructField("stop", LongType, nullable = false)))

@@ -813,8 +813,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming CMS/HLL sketches: cross-batch state equals the batch sketch of the union") {
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[String]
     val cms = graft.streaming.StreamingSketches.cmsStream(
       in.toDF().toDF("v"), "v", depth = 3, width = 16, salt = "s")

@@ -52,51 +52,53 @@ class ZOrderSpec extends SparkSuite {
   }
 
   test("writeZOrdered: round-trips, and each output file spans a tight quadrant of both dims") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
-      .toDF("x", "y")
-    ZOrderLayout.writeZOrdered(grid, s"$dir/t", "x", "y", bits = 6, numFiles = 4)
-    val back = spark.read.parquet(s"$dir/t")
-    assert(back.count() == 4096L)
-    assert(back.columns.toSeq == Seq("x", "y"))
-    // The writer's contract is Z-CONTIGUOUS files (range partition, sorted
-    // within): per-file z intervals must be disjoint and ordered. Exact
-    // 32x32 quadrants would need exact boundaries — repartitionByRange
-    // SAMPLES its boundaries, so a file may straddle a quadrant edge; the
-    // tile-exact locality claim is pinned by the grid test above instead.
-    val zc = ZOrderLayout.zValue(col("x"), col("y"), 6)
-    val ranges = back.withColumn("f", input_file_name())
-      .groupBy("f").agg(min(zc).as("zlo"), max(zc).as("zhi"),
-        (max("x") - min("x")).as("dx"))
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    assert(ranges.length == 4)
-    ranges.sliding(2).foreach { case Array((_, hi, _), (lo, _, _)) =>
-      assert(hi < lo, s"file z ranges overlap: $ranges")
+    withTempDir("zorder") { dir =>
+      val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
+        .toDF("x", "y")
+      ZOrderLayout.writeZOrdered(grid, s"$dir/t", "x", "y", bits = 6, numFiles = 4)
+      val back = spark.read.parquet(s"$dir/t")
+      assert(back.count() == 4096L)
+      assert(back.columns.toSeq == Seq("x", "y"))
+      // The writer's contract is Z-CONTIGUOUS files (range partition, sorted
+      // within): per-file z intervals must be disjoint and ordered. Exact
+      // 32x32 quadrants would need exact boundaries — repartitionByRange
+      // SAMPLES its boundaries, so a file may straddle a quadrant edge; the
+      // tile-exact locality claim is pinned by the grid test above instead.
+      val zc = ZOrderLayout.zValue(col("x"), col("y"), 6)
+      val ranges = back.withColumn("f", input_file_name())
+        .groupBy("f").agg(min(zc).as("zlo"), max(zc).as("zhi"),
+          (max("x") - min("x")).as("dx"))
+        .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(_._1)
+      assert(ranges.length == 4)
+      ranges.sliding(2).foreach { case Array((_, hi, _), (lo, _, _)) =>
+        assert(hi < lo, s"file z ranges overlap: $ranges")
+      }
+      // and the clustering is real: straddlers aside, files beat the
+      // unsorted/x-ignorant baseline of 63 per file on average
+      assert(ranges.map(_._3).sum < 4 * 63)
+      intercept[IllegalArgumentException] {
+        ZOrderLayout.writeZOrdered(grid.withColumn("__z", lit(1)),
+          s"$dir/t2", "x", "y", 6, 2) }
     }
-    // and the clustering is real: straddlers aside, files beat the
-    // unsorted/x-ignorant baseline of 63 per file on average
-    assert(ranges.map(_._3).sum < 4 * 63)
-    intercept[IllegalArgumentException] {
-      ZOrderLayout.writeZOrdered(grid.withColumn("__z", lit(1)),
-        s"$dir/t2", "x", "y", 6, 2) }
   }
 
   test("z-ordered files prune on the NON-leading dimension; a 1-D sort cannot") {
-    val dir = java.nio.file.Files.createTempDirectory("zprune").toString
-    val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
-      .toDF("x", "y")
-    ZOrderLayout.writeZOrdered(grid, s"$dir/z", "x", "y", bits = 6,
-      numFiles = 16)
-    grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.parquet(s"$dir/x")
-    def filesTouched(path: String): Long = spark.read.parquet(path)
-      .where(col("y") < 8).select(input_file_name()).distinct().count()
-    // a y-only predicate: the z layout confines y<8 rows to the files of
-    // the bottom tile row; the x-sorted layout spreads them over EVERY file
-    val zf = filesTouched(s"$dir/z")
-    val xf = filesTouched(s"$dir/x")
-    assert(xf == 16L, s"x-sorted layout should spread y rows everywhere, got $xf")
-    assert(zf <= 8L, s"z layout should confine the y slice, got $zf")
+    withTempDir("zprune") { dir =>
+      val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
+        .toDF("x", "y")
+      ZOrderLayout.writeZOrdered(grid, s"$dir/z", "x", "y", bits = 6,
+        numFiles = 16)
+      grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
+        .write.parquet(s"$dir/x")
+      def filesTouched(path: String): Long = spark.read.parquet(path)
+        .where(col("y") < 8).select(input_file_name()).distinct().count()
+      // a y-only predicate: the z layout confines y<8 rows to the files of
+      // the bottom tile row; the x-sorted layout spreads them over EVERY file
+      val zf = filesTouched(s"$dir/z")
+      val xf = filesTouched(s"$dir/x")
+      assert(xf == 16L, s"x-sorted layout should spread y rows everywhere, got $xf")
+      assert(zf <= 8L, s"z layout should confine the y slice, got $zf")
+    }
   }
 }
